@@ -64,7 +64,7 @@ def main(argv=None) -> int:
         g = sub.add_parser(name, help=helptext)
         g.add_argument("--graph", required=True)
         g.add_argument("--out", required=True)
-        g.add_argument("--max-iter", type=int, default=50 if name == "cc" else 20)
+        g.add_argument("--max-iter", type=int, default=None if name == "cc" else 20)
         g.add_argument("--partitions", type=int, default=32)
         g.add_argument("--checkpoint-dir", default=None)
         g.add_argument("--resume", action="store_true")

@@ -47,11 +47,8 @@ from pyspark.sql import DataFrame, functions as F
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.checkpoint import CheckpointManager
 from sparkgatha.graph.metrics import MetricsSink
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
+from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.util import no_aqe
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -117,13 +114,12 @@ def _fingerprint(e: DataFrame):
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 50,
+    max_iter: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
     run_id: str = "cc",
     metrics_sink: MetricsSink | None = None,
-    check_every: int = 1,
 ) -> DataFrame:
     """(vertex long, component long) — component = min vertex id, exact.
 
@@ -133,24 +129,9 @@ def connected_components(
     edge set + manifest (G12); ``resume=True`` continues from the largest
     complete round (the algorithm state IS the link set, so restarting on
     it is exact).  Per-round link counts/fingerprints go to the S6 sink.
-
-    ``check_every``: fuse this many large-star+small-star rounds into
-    ONE Spark job (the pagerank/LPA fused-block discipline — interior
-    rounds end in a lazy ``localCheckpoint``, the block-end fingerprint
-    is the only action).  Labels are bit-identical: the star rounds are
-    idempotent at the fixpoint, so overshooting a mid-block convergence
-    changes nothing; only metric/convergence granularity coarsens to
-    block boundaries.  Durable checkpoints keep their cadence.
-
-    MEASURED CAVEAT — unlike pagerank/LPA, fusing HURTS here (2x wall
-    at 2e7 edges: 12 s/run per-round vs 27 s fused): each star round
-    references its input in several branches, and inside one fused job
-    Spark launches those consumer stages concurrently BEFORE the lazy
-    interior cache exists, so they race and recompute the round instead
-    of sharing it.  The per-round fingerprint action (the thing fusion
-    removes) is what forces materialization between fan-outs.  Default
-    1 is the fast path; the knob stays for workloads whose round count
-    dwarfs per-job overhead, with this trade documented.
+    ``max_iter`` follows the round and cap policy of graph/rounds.py:
+    ``None`` runs to the fixpoint, an integer stops silently after that
+    round.
     """
     spark = edges.sparkSession
     ckpt = CheckpointManager(checkpoint_dir, run_id)
@@ -187,48 +168,40 @@ def connected_components(
             vertices, n = f_v.result()
             e, start_it = f_e.result()
         prev_fp = _fingerprint(e)
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        it = start_it
-        while it < max_iter:
-            block = min(max(check_every, 1), max_iter - it)
-            if checkpoint_dir is not None:
-                block = min(block, checkpoint_every - it % checkpoint_every)
-            block = max(block, 1)
+        for r in fixpoint_rounds(
+            spark, "connected_components", max_iter, start=start_it
+        ):
             t0 = time.monotonic()
             # r6 scale-adaptive exchanges: size this round's shuffles to
             # the CURRENT link count (the fingerprint already tallies
             # it) — labels are partitioning-independent exact integers,
-            # so only wall changes (guide §2.2; capped at the session
-            # default so cluster-scale runs are untouched)
-            round_p = adaptive_shuffle_partitions(prev_fp[1], default_p)
-            with scoped_shuffle_partitions(spark, round_p):
-                for _ in range(block):
-                    # r6: the large-star output feeds BOTH small-star
-                    # branches (its min agg and its join), and the two
-                    # copies optimize into non-canonically-equal
-                    # subtrees (filter/pruning pushdown diverges), so
-                    # ReusedExchange never collapses them — a lazy
-                    # chain computes the large star TWICE per round
-                    # (measured: 4x 64-task map stages per round job at
-                    # 2e7 edges).  Materializing it eagerly costs one
-                    # extra job per round and removes the duplicate
-                    # compute outright; labels are bit-identical (same
-                    # algebra, same round count).
-                    e = _small_star(
-                        _large_star(e).localCheckpoint(eager=True)
-                    ).localCheckpoint(eager=False)
-                it += block
+            # so only wall changes
+            with r.width(prev_fp[1]):
+                # r6: the large-star output feeds BOTH small-star
+                # branches (its min agg and its join), and the two
+                # copies optimize into non-canonically-equal subtrees
+                # (filter/pruning pushdown diverges), so ReusedExchange
+                # never collapses them — a lazy chain computes the large
+                # star TWICE per round (measured: 4x 64-task map stages
+                # per round job at 2e7 edges).  Materializing it eagerly
+                # costs one extra job per round and removes the
+                # duplicate compute outright; labels are bit-identical
+                # (same algebra, same round count).
+                e = _small_star(
+                    _large_star(e).localCheckpoint(eager=True)
+                ).localCheckpoint(eager=False)
                 fp = _fingerprint(e)
             wall = time.monotonic() - t0
             converged = fp == prev_fp
             durable = checkpoint_dir is not None and (
-                it % checkpoint_every == 0 or converged or it >= max_iter
+                r.n % checkpoint_every == 0 or converged or r.last
             )
             sha = f"{(fp[0] or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{fp[1]}"
             if durable:
-                e = ckpt.save(it, e, sha, metrics={"links": fp[1]})
+                e = ckpt.save(r.n, e, sha, metrics={"links": fp[1]})
             sink.record(
-                it, float(abs(fp[1] - prev_fp[1])), fp[1], n, wall * 1000.0, sha
+                r.n, float(abs(fp[1] - prev_fp[1])), fp[1], n, wall * 1000.0,
+                sha,
             )
             if converged:
                 break

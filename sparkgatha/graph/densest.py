@@ -36,12 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
+from sparkgatha.graph.rounds import fixpoint_rounds
 from sparkgatha.util import no_aqe
-
-#: fixpoint-mode runaway bound — the peel provably keeps < 1/(1+ε) of
-#: the vertices per round, so even ε=0.01 empties 10^12 vertices in
-#: ~2800 rounds; 100k only trips on a broken shrink step
-_FIXPOINT_ROUND_CAP = 100_000
 
 
 @dataclass(frozen=True)
@@ -61,11 +57,11 @@ def densest_subgraph(
     undirected simple graph of ``edges`` (self-loops dropped) — a
     2(1+ε)-approximate densest subgraph.
 
-    ``max_rounds=None`` (default) peels until the edge set empties (the
-    full guarantee); an integer runs EXACTLY that many peel rounds and
-    picks the densest among rounds 0..max_rounds — the fixed-round
-    oracle-comparison mode (the peel is deterministic, so the truncated
-    run is a prefix of the full one).
+    ``max_rounds`` follows the round and cap policy of graph/rounds.py:
+    ``None`` peels until the edge set empties (the full guarantee; even
+    ε=0.01 empties 10^12 vertices in ~2800 rounds), an integer picks
+    the densest among rounds 0..max_rounds (the peel is deterministic,
+    so the truncated run is a prefix of the full one).
     """
     if not epsilon > 0.0:
         raise ValueError(f"epsilon must be > 0, got {epsilon}")
@@ -93,22 +89,13 @@ def densest_subgraph(
             )
         best, best_rho, best_round = deg, n_e / n_v, 0
         rnd = 0
-        bound = _FIXPOINT_ROUND_CAP if max_rounds is None else max_rounds
-        from sparkgatha.util import (
-            adaptive_shuffle_partitions,
-            scoped_shuffle_partitions,
-        )
-
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        while n_e > 0 and rnd < bound:
-            rnd += 1
+        for r in fixpoint_rounds(spark, "densest_subgraph", max_rounds):
+            rnd = r.n
             rho = n_e / n_v
             keep = deg.filter(F.col("deg") > factor * rho).select("vertex")
             # r6: exchanges sized to the shrinking edge set (integer
             # degrees + semi-joins, partitioning-independent)
-            with scoped_shuffle_partitions(
-                spark, adaptive_shuffle_partitions(n_e, default_p)
-            ):
+            with r.width(n_e):
                 e = (
                     e.join(
                         keep.withColumnRenamed("vertex", "u"), "u", "left_semi"
@@ -125,13 +112,6 @@ def densest_subgraph(
                 n_v = deg.count()
             if n_e / n_v > best_rho:
                 best, best_rho, best_round = deg, n_e / n_v, rnd
-        if max_rounds is None and n_e > 0:
-            raise RuntimeError(
-                f"densest-subgraph peel did not empty within "
-                f"{_FIXPOINT_ROUND_CAP} rounds — the threshold step is not "
-                "shrinking the graph (shrink-step bug), which the BKV bound "
-                "rules out for a correct peel"
-            )
         return DensestResult(
             vertices=best,
             density=best_rho,

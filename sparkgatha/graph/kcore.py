@@ -24,15 +24,11 @@ edges, and an edge is only removed when an endpoint leaves), so an
 equal count on the just-checkpointed table IS the fixpoint — no extra
 shuffle, no fingerprint.
 
-``max_iter`` semantics: ``None`` (the default) runs to fixpoint — the
-exact k-core — with a runaway bound that RAISES rather than silently
-returning a partially-peeled graph (a long path at k=2 peels only its
-two endpoints per synchronous round, so silent truncation would label
-mid-path vertices as core members).  An integer runs AT MOST that many
-rounds and stops silently at the bound: the fixed-round oracle mode —
-callers comparing against an R-round unrolled SQL peel rely on the
-round count being exactly the oracle's when convergence is not reached
-earlier (relational.py:q_k_core).
+``max_iter`` follows the round and cap policy of graph/rounds.py:
+``None`` (the default) peels to the exact k-core — silent truncation
+would label mid-path vertices as core members, since a long path at
+k=2 peels only its two endpoints per round — and an integer is the
+fixed-round oracle mode (relational.py:q_k_core).
 
 ``core_numbers`` runs the peel for k = 1, 2, ... on the previous
 core's residual graph (the (k+1)-core is a subgraph of the k-core, so
@@ -45,38 +41,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
-
-# Fixpoint-mode runaway bound: synchronous peeling removes >= 1 vertex
-# per non-final round, so this only trips on graphs with >1e6 peel
-# waves — at that diameter the synchronous scheme is the wrong tool and
-# failing loudly beats burning 2e6 Spark jobs.
-_FIXPOINT_ROUND_CAP = 1_000_000
+from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.util import no_aqe
 
 
 def _peel(e: DataFrame, k: int, max_iter: int | None) -> DataFrame:
     """Iterate the degree-≥-k filter over a checkpointed canonical edge
-    set.  ``max_iter=None`` → fixpoint (raises at the runaway cap);
-    integer → at most that many rounds, silent stop at the bound (the
-    fixed-round oracle mode).  Returns the surviving edge set."""
-    strict = max_iter is None
-    bound = _FIXPOINT_ROUND_CAP if strict else max_iter
+    set under the graph/rounds.py policy.  Returns the surviving edge
+    set."""
     n_prev = e.count()
-    spark = e.sparkSession
-    default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    converged = n_prev == 0
-    for _ in range(bound):
-        if converged:
-            break
+    if n_prev == 0:
+        return e
+    for r in fixpoint_rounds(e.sparkSession, "k_core", max_iter):
         # r6: size each peel round's exchanges to the surviving edge
         # set (integer degrees + semi-joins, partitioning-independent)
-        with scoped_shuffle_partitions(
-            spark, adaptive_shuffle_partitions(n_prev, default_p)
-        ):
+        with r.width(n_prev):
             deg = (
                 e.select(F.col("u").alias("x"))
                 .unionByName(e.select(F.col("v").alias("x")))
@@ -91,15 +70,9 @@ def _peel(e: DataFrame, k: int, max_iter: int | None) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
             n = e.count()
-        converged = n == n_prev
+        if n == n_prev:
+            break
         n_prev = n
-    if strict and not converged:
-        raise RuntimeError(
-            f"k-core peel (k={k}) did not reach fixpoint within "
-            f"{_FIXPOINT_ROUND_CAP} synchronous rounds; this graph's peel "
-            "diameter is beyond the synchronous scheme — pass an explicit "
-            "max_iter to accept a truncated (non-exact) peel"
-        )
     return e
 
 
@@ -113,9 +86,7 @@ def k_core(
     """(vertex, core_degree): vertices of the k-core with their degree
     inside the core.  Empty result when the k-core is empty.
 
-    ``max_iter=None`` (default) peels to fixpoint — the exact k-core;
-    an integer caps the synchronous rounds (fixed-round oracle mode,
-    see module docstring).  ``assume_canonical`` skips the
+    ``max_iter``: see the module docstring.  ``assume_canonical`` skips the
     least/greatest + distinct normalization when the caller's edge set
     is already distinct canonical u < v pairs without self-loops — one
     less full-edge-set shuffle, which matters when the input is the
@@ -146,8 +117,7 @@ def core_numbers(
 ) -> DataFrame:
     """(vertex, core): the largest k for which the vertex survives the
     k-core peel — exact (``networkx.core_number`` semantics) with the
-    default ``max_iter=None``; an integer ``max_iter`` truncates each
-    peel at that round count (non-exact, silent — fixed-round mode).
+    default ``max_iter=None`` (the graph/rounds.py policy, per peel).
     Peels k = 1, 2, ... over the telescoping residual graph until it
     empties (or ``max_k``, a runaway bound for degenerate inputs)."""
     spark = edges.sparkSession

@@ -38,13 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    checkpoint_reset_stats,
-    md5_long,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
+from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.util import checkpoint_reset_stats, md5_long, no_aqe
 
 
 def _edge_priority(u: Column, v: Column, rnd: int, seed: int) -> Column:
@@ -63,11 +58,9 @@ def maximal_matching(
     undirected graph of ``edges`` (canonical u < v rows) and the round
     each pair matched.
 
-    Self-loops are ignored (a loop cannot be matched).  ``max_rounds=
-    None`` (default) runs to the empty-edge-set fixpoint; an integer
-    runs EXACTLY that many rounds and stops silently — the
-    oracle-comparison mode (matching growth is monotone, so the
-    fixed-round result is a prefix of the fixpoint).
+    Self-loops are ignored (a loop cannot be matched).  ``max_rounds``
+    follows the round and cap policy of graph/rounds.py; the fixed-round
+    result is a prefix of the fixpoint (matching growth is monotone).
     """
     if max_rounds is not None and max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
@@ -75,22 +68,22 @@ def maximal_matching(
     with no_aqe(spark):
         e = checkpoint_reset_stats(canonical_undirected(edges))
         matched = None
-        rnd = 0
         # r6: cached full count replaces the limit probe and sizes each
         # round's exchanges to the shrinking candidate edge set (md5
         # priorities + min-struct aggs are partitioning-independent)
         n_e = e.count()
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        while n_e > 0:
-            rnd += 1
-            with scoped_shuffle_partitions(
-                spark, adaptive_shuffle_partitions(n_e, default_p)
-            ):
+        if n_e == 0:
+            # edge-free input: empty matching with the right schema
+            return e.select(
+                "u", "v", F.lit(0).alias("round")
+            ).limit(0)
+        for r in fixpoint_rounds(spark, "maximal_matching", max_rounds):
+            with r.width(n_e):
                 pri = e.select(
                     "u",
                     "v",
                     F.struct(
-                        _edge_priority(F.col("u"), F.col("v"), rnd, seed).alias(
+                        _edge_priority(F.col("u"), F.col("v"), r.n, seed).alias(
                             "p"
                         ),
                         F.col("u").alias("pu"),
@@ -116,11 +109,11 @@ def maximal_matching(
                     )
                     .select("u", "v")
                 )
-                picked = winners.select("u", "v", F.lit(rnd).alias("round"))
+                picked = winners.select("u", "v", F.lit(r.n).alias("round"))
                 matched = (
                     picked if matched is None else matched.unionByName(picked)
                 )
-                if max_rounds is not None and rnd >= max_rounds:
+                if r.last:
                     break  # before the shrink: its frames would never be read
                 gone = (
                     winners.select(F.col("u").alias("x"))
@@ -132,11 +125,8 @@ def maximal_matching(
                     .join(gone.withColumnRenamed("x", "v"), "v", "left_anti")
                 )
                 n_e = e.count()
-        if matched is None:
-            # edge-free input: empty matching with the right schema
-            return e.select(
-                "u", "v", F.lit(0).alias("round")
-            ).limit(0)
+            if n_e == 0:
+                break
         return matched
 
 

@@ -38,18 +38,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    checkpoint_reset_stats,
-    md5_long,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
+from sparkgatha.graph.rounds import fixpoint_rounds, width
+from sparkgatha.util import checkpoint_reset_stats, md5_long, no_aqe
 
 
 def _priority(v: Column, rnd: int, seed: int) -> Column:
     return md5_long(
         F.concat(v.cast("string"), F.lit(f":{rnd}:{seed}"))
+    )
+
+
+def _endpoints(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Checkpointed distinct single-column ``x`` universe of the
+    endpoints ``a`` and ``b`` of ``edges``."""
+    return checkpoint_reset_stats(
+        edges.select(F.col(a).alias("x"))
+        .unionByName(edges.select(F.col(b).alias("x")))
+        .distinct()
     )
 
 
@@ -64,11 +69,9 @@ def maximal_independent_set(
     undirected graph of ``edges`` and the round each joined.
 
     Self-loops are ignored for adjacency (a loop-only vertex is
-    isolated, wins round 1).  ``max_rounds=None`` (default) runs to the
-    empty-frontier fixpoint; an integer runs EXACTLY that many rounds
-    and stops silently — the oracle-comparison mode (the unrolled SQL
-    replay runs the same fixed rounds; MIS growth is monotone, so the
-    fixed-round result is a prefix of the fixpoint).
+    isolated, wins round 1).  ``max_rounds`` follows the round and cap
+    policy of graph/rounds.py; the fixed-round result is a prefix of
+    the fixpoint (MIS growth is monotone).
 
     ``assume_canonical``: the caller guarantees ``edges`` is already
     the distinct canonical src<dst loop-free set with flat lineage
@@ -81,31 +84,24 @@ def maximal_independent_set(
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     spark = edges.sparkSession
     with no_aqe(spark):
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if assume_canonical:
             e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-            pre = None
-            entry_p = default_p
+            active = (
+                vertices.select("x") if vertices is not None
+                else _endpoints(edges, "src", "dst")
+            )
         else:
             # r6: one materialization of the (possibly expensive lazy)
             # input — canonicalization and the active-vertex universe
             # each consumed `edges`, re-running its whole upstream plan
             pre = edges.select("src", "dst").localCheckpoint(eager=True)
-            entry_p = adaptive_shuffle_partitions(pre.count(), default_p)
-            with scoped_shuffle_partitions(spark, entry_p):
+            with width(spark, pre.count()):
                 e = checkpoint_reset_stats(canonical_undirected(pre))
-        if vertices is not None:
-            active = vertices.select("x")
-        else:
-            src = pre if pre is not None else edges
-            with scoped_shuffle_partitions(spark, entry_p):
-                active = checkpoint_reset_stats(
-                    src.select(F.col("src").alias("x"))
-                    .unionByName(src.select(F.col("dst").alias("x")))
-                    .distinct()
+                active = (
+                    vertices.select("x") if vertices is not None
+                    else _endpoints(pre, "src", "dst")
                 )
         mis = None
-        rnd = 0
         # r6: full cached counts instead of limit probes — they double
         # as the emptiness test and size each round's exchanges to the
         # CURRENT (geometrically shrinking) frontier; md5 priorities
@@ -113,15 +109,14 @@ def maximal_independent_set(
         # is bit-identical at any partition count
         n_active = active.count()
         n_e = e.count()
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        while n_active > 0:
-            rnd += 1
-            with scoped_shuffle_partitions(
-                spark,
-                adaptive_shuffle_partitions(max(n_e, n_active), default_p),
-            ):
-                pu, pv = _priority(F.col("u"), rnd, seed), _priority(
-                    F.col("v"), rnd, seed
+        if n_active == 0:
+            return active.select(
+                F.col("x").alias("vertex"), F.lit(0).alias("round")
+            )
+        for r in fixpoint_rounds(spark, "maximal_independent_set", max_rounds):
+            with r.width(max(n_e, n_active)):
+                pu, pv = _priority(F.col("u"), r.n, seed), _priority(
+                    F.col("v"), r.n, seed
                 )
                 u_loses = (pu > pv) | ((pu == pv) & (F.col("u") > F.col("v")))
                 # the larger-priority endpoint of every active edge cannot
@@ -132,9 +127,9 @@ def maximal_independent_set(
                 winners = checkpoint_reset_stats(
                     active.join(blocked, "x", "left_anti")
                 )
-                picked = winners.select("x", F.lit(rnd).alias("round"))
+                picked = winners.select("x", F.lit(r.n).alias("round"))
                 mis = picked if mis is None else mis.unionByName(picked)
-                if max_rounds is not None and rnd >= max_rounds:
+                if r.last:
                     break  # before the shrink: its frames would never be read
                 # winners + their neighbors deactivate
                 removed = (
@@ -159,18 +154,9 @@ def maximal_independent_set(
                     .join(active.withColumnRenamed("x", "v"), "v", "left_semi")
                 )
                 n_e = e.count()
-        if mis is None:
-            return active.select(
-                F.col("x").alias("vertex"), F.lit(0).alias("round")
-            )
+            if n_active == 0:
+                break
         return mis.select(F.col("x").alias("vertex"), "round")
-
-
-#: colors are bounded by greedy chromatic number ≤ Δ+1; a web-scale
-#: co-occurrence graph's MIS-greedy coloring runs a few dozen colors,
-#: so 256 only trips on a broken shrink step.  Applies only in
-#: fixpoint mode — an explicit max_colors is the caller's bound.
-_COLOR_RAIL = 256
 
 
 def luby_coloring(
@@ -188,10 +174,11 @@ def luby_coloring(
 
     Deterministic and partitioning-independent (everything reduces to
     the md5 priority rule), so the pure-Python replay in the tests
-    matches vertex-for-vertex.  ``max_colors``: integer = stop silently
-    after that many classes (prefix semantics, mirroring
-    ``maximal_independent_set``'s fixed-round mode); None = run until
-    every vertex is colored, with a rail at 256 classes.
+    matches vertex-for-vertex.  ``max_colors`` is the round bound of
+    graph/rounds.py, one class per round; in fixpoint mode the cap is
+    256 classes, since greedy coloring needs at most Δ+1 and a web-scale
+    co-occurrence graph needs a few dozen, so only a broken shrink step
+    reaches it.
     """
     if max_colors is not None and max_colors < 1:
         raise ValueError(f"max_colors must be >= 1, got {max_colors}")
@@ -201,49 +188,27 @@ def luby_coloring(
         # maximal_independent_set — same double-consumption), entry
         # exchanges sized to the materialized input
         pre = edges.select("src", "dst").localCheckpoint(eager=True)
-        entry_p = adaptive_shuffle_partitions(
-            pre.count(),
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-        )
-        with scoped_shuffle_partitions(spark, entry_p):
+        with width(spark, pre.count()):
             e = checkpoint_reset_stats(canonical_undirected(pre))
-            remaining = checkpoint_reset_stats(
-                pre.select(F.col("src").alias("x"))
-                .unionByName(pre.select(F.col("dst").alias("x")))
-                .distinct()
-            )
+            remaining = _endpoints(pre, "src", "dst")
         colored = None
-        c = 0
         # r6: cached full counts replace the limit probes and size the
         # per-class exchanges to the shrinking uncolored subgraph (see
         # maximal_independent_set — same exactness argument)
         n_remaining = remaining.count()
         n_e = e.count()
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        while n_remaining > 0:
-            c += 1
-            if max_colors is None and c > _COLOR_RAIL:
-                raise RuntimeError(
-                    f"coloring exceeded {_COLOR_RAIL} classes — the "
-                    "uncolored subgraph is not shrinking (shrink-step "
-                    "bug), not a legitimately dense graph"
-                )
-            with scoped_shuffle_partitions(
-                spark,
-                adaptive_shuffle_partitions(
-                    max(n_e, n_remaining), default_p
-                ),
-            ):
+        if n_remaining == 0:
+            return remaining.select(
+                F.col("x").alias("vertex"), F.lit(0).alias("color")
+            )
+        for r in fixpoint_rounds(spark, "luby_coloring", max_colors, cap=256):
+            with r.width(max(n_e, n_remaining)):
                 # endpoint universe of the surviving edge set, built ONCE
                 # per class and shared with the MIS call
-                eps = checkpoint_reset_stats(
-                    e.select(F.col("u").alias("x"))
-                    .unionByName(e.select(F.col("v").alias("x")))
-                    .distinct()
-                )
+                eps = _endpoints(e, "u", "v")
                 mis = maximal_independent_set(
                     e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-                    seed=seed + c,
+                    seed=seed + r.n,
                     assume_canonical=True,
                     vertices=eps,
                 ).select("vertex")
@@ -254,11 +219,11 @@ def luby_coloring(
                 cls = checkpoint_reset_stats(
                     mis.withColumnRenamed("vertex", "x").unionByName(isolated)
                 )
-                picked = cls.select("x", F.lit(c).alias("color"))
+                picked = cls.select("x", F.lit(r.n).alias("color"))
                 colored = (
                     picked if colored is None else colored.unionByName(picked)
                 )
-                if max_colors is not None and c >= max_colors:
+                if r.last:
                     break  # before the shrink: its frames would never be read
                 remaining = checkpoint_reset_stats(
                     remaining.join(cls, "x", "left_anti")
@@ -269,8 +234,6 @@ def luby_coloring(
                     .join(remaining.withColumnRenamed("x", "v"), "v", "left_semi")
                 )
                 n_e = e.count()
-        if colored is None:
-            return remaining.select(
-                F.col("x").alias("vertex"), F.lit(0).alias("color")
-            )
+            if n_remaining == 0:
+                break
         return colored.select(F.col("x").alias("vertex"), "color")

@@ -39,16 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.cc import connected_components
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    checkpoint_reset_stats,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
-
-#: component count at least halves per round, so > 64 rounds means the
-#: loop is broken, not the graph large
-_ROUND_RAIL = 64
+from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.util import checkpoint_reset_stats, no_aqe
 
 
 def minimum_spanning_forest(edges: DataFrame) -> DataFrame:
@@ -83,20 +75,14 @@ def minimum_spanning_forest(edges: DataFrame) -> DataFrame:
         # working set shrinks geometrically, so late rounds run on a
         # handful of partitions instead of the session default)
         n_work = work.count()
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if n_work == 0:
+            # no non-self-loop edges at all
+            return work.select("u", "v", "weight")
         forest = None
-        rounds = 0
-        while n_work > 0:
-            rounds += 1
-            if rounds > _ROUND_RAIL:
-                raise RuntimeError(
-                    f"Borůvka failed to converge within {_ROUND_RAIL} "
-                    "rounds — components halve per round, so this is a "
-                    "merge bug, not a large graph"
-                )
-            with scoped_shuffle_partitions(
-                spark, adaptive_shuffle_partitions(n_work, default_p)
-            ):
+        # the component count at least halves per round, so a 65th round
+        # means the loop is broken, not the graph large
+        for r in fixpoint_rounds(spark, "minimum_spanning_forest", cap=64):
+            with r.width(n_work):
                 # each component picks its lightest incident crossing
                 # edge under the (weight, u, v) total order
                 pick = F.struct("weight", "u", "v", "cu", "cv").alias("e")
@@ -155,9 +141,8 @@ def minimum_spanning_forest(edges: DataFrame) -> DataFrame:
                 )
                 work = checkpoint_reset_stats(work)
                 n_work = work.count()
-        if forest is None:
-            # no non-self-loop edges at all
-            return work.select("u", "v", "weight")
+            if n_work == 0:
+                break
         return forest.select("u", "v", "weight")
 
 

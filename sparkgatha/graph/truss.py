@@ -16,11 +16,9 @@ Synchronous peel, the k-core discipline (graph/kcore.py):
 
 Monotonicity gives the same free convergence test as k-core: a round
 drops an edge iff the edge count changes, so an unchanged count on the
-checkpointed set IS the fixpoint — no extra shuffle.  ``max_iter=None``
-(default) runs to the exact fixpoint and RAISES at a runaway cap;
-an integer ``max_iter`` is the fixed-round oracle mode (round-for-round
-parity with an unrolled SQL peel, extra rounds past the fixpoint are
-no-ops).
+checkpointed set IS the fixpoint — no extra shuffle.  ``max_iter``
+follows the round and cap policy of graph/rounds.py (extra fixed rounds
+past the fixpoint are no-ops).
 
 Output: (u, v, support) — canonical u < v edges of the k-truss with
 their final within-truss support.  Exact bar: edge set equals
@@ -32,17 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
+from sparkgatha.graph.rounds import fixpoint_rounds, width
 from sparkgatha.graph.triangles import _degrees, _orient, _triangles
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    checkpoint_reset_stats,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
-
-#: runaway rail for fixpoint mode — each round drops ≥1 edge, so this
-#: only trips on a pathological peel chain (document, don't truncate)
-FIXPOINT_MAX_ROUNDS = 10_000
+from sparkgatha.util import checkpoint_reset_stats, no_aqe
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
@@ -88,19 +78,14 @@ def k_truss(
         # the planner by round ~12 (see the helper's docstring)
         und = checkpoint_reset_stats(canonical_undirected(edges))
         n_edges = und.count()
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        fixpoint = max_iter is None
-        rounds = FIXPOINT_MAX_ROUNDS if fixpoint else max_iter
-        for _ in range(rounds):
+        for r in fixpoint_rounds(spark, "k_truss", max_iter):
             if n_edges == 0:
                 break
             # r6: size this round's exchanges to the surviving edge set
             # (integer supports + anti/left joins — results are
             # partitioning-independent; see util.adaptive_shuffle_
             # partitions)
-            with scoped_shuffle_partitions(
-                spark, adaptive_shuffle_partitions(n_edges, default_p)
-            ):
+            with r.width(n_edges):
                 sup = _edge_support(und)
                 kept = checkpoint_reset_stats(
                     und.join(sup, ["u", "v"], "left")
@@ -112,16 +97,7 @@ def k_truss(
                 und = kept
                 break
             und, n_edges = kept, n_kept
-        else:
-            if fixpoint:
-                raise RuntimeError(
-                    f"k_truss exceeded {FIXPOINT_MAX_ROUNDS} peel rounds "
-                    "without converging — raise FIXPOINT_MAX_ROUNDS or "
-                    "pass an explicit max_iter"
-                )
-        with scoped_shuffle_partitions(
-            spark, adaptive_shuffle_partitions(n_edges, default_p)
-        ):
+        with width(spark, n_edges):
             out = checkpoint_reset_stats(
                 und.join(_edge_support(und), ["u", "v"], "left").select(
                     "u", "v", F.coalesce("support", F.lit(0)).alias("support")

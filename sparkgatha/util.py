@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import threading
 
 from contextlib import contextmanager
 
@@ -109,11 +110,7 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
 ADAPTIVE_ROWS_PER_PARTITION = 131_072
 
 
-def adaptive_shuffle_partitions(
-    n_rows: int,
-    default: int,
-    rows_per_partition: int = ADAPTIVE_ROWS_PER_PARTITION,
-) -> int:
+def adaptive_shuffle_partitions(n_rows: int, default: int) -> int:
     """Scale-adaptive exchange sizing (optimization guide §2.2):
     partitions derived from the CURRENT data size, bounded above by the
     session's configured default (the cluster-scale setting) — never a
@@ -133,25 +130,37 @@ def adaptive_shuffle_partitions(
     """
     if n_rows <= 0:
         return 1
-    return max(1, min(default, -(-n_rows // rows_per_partition)))
+    return max(1, min(default, -(-n_rows // ADAPTIVE_ROWS_PER_PARTITION)))
+
+
+#: held for the whole of every conf scope below.  The scoped confs are
+#: shared by the whole session, so two threads whose save/set/restore
+#: interleave would leave the session at the wrong value for good.
+#: Re-entrant because scopes nest in one thread (MST runs CC inside its
+#: round, coloring runs MIS, dedup runs CC); a thread-pool worker must
+#: not enter a scope while its submitter holds one.
+_CONF_SCOPE_LOCK = threading.RLock()
 
 
 @contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str, *default: str):
+    with _CONF_SCOPE_LOCK:
+        prev = spark.conf.get(key, *default)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
+
+
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Scope ``spark.sql.shuffle.partitions`` for one iterative round.
 
     The conf is read at physical-planning (action) time, so the round's
     lazy frames must be EXECUTED inside the scope for it to apply."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    return _scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
-@contextmanager
 def no_aqe(spark: SparkSession):
     """Disable adaptive query execution for the duration of an iterative
     superstep loop.
@@ -165,9 +174,4 @@ def no_aqe(spark: SparkSession):
     engine scopes AQE off inside G4–G6/G9 loops and leaves it on for the
     relational surface.
     """
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false", "true")

@@ -1,0 +1,174 @@
+"""The exact-fixpoint round driver (graph/rounds.py) and the conf scopes
+it builds on (util.scoped_shuffle_partitions / util.no_aqe).
+
+Every test here reads and sets session confs or local properties only;
+none launches a Spark job, except the CC golden at the bottom."""
+
+import ast
+import pathlib
+import re
+import threading
+import time
+
+import networkx as nx
+import pytest
+
+from graph_helpers import nx_graph, random_graph, to_spark_edges
+
+from sparkgatha.graph import connected_components
+from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.util import no_aqe, scoped_shuffle_partitions
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_AQE = "spark.sql.adaptive.enabled"
+_DESCRIPTION = "spark.job.description"
+
+
+def _never_converges(spark, max_rounds, cap=5):
+    """Run the driver with a step that never breaks; return the round
+    numbers and ``last`` flags it handed out."""
+    seen = []
+    for r in fixpoint_rounds(spark, "never_converges", max_rounds, cap=cap):
+        seen.append((r.n, r.last))
+    return seen
+
+
+def test_fixpoint_mode_raises_naming_the_operator(spark):
+    seen = []
+    with pytest.raises(RuntimeError, match="never_converges.*5 rounds"):
+        for r in fixpoint_rounds(spark, "never_converges", cap=5):
+            seen.append(r.n)
+    assert seen == [1, 2, 3, 4, 5]
+
+
+def test_fixed_rounds_stop_silently_after_exactly_n(spark):
+    assert _never_converges(spark, 3) == [(1, False), (2, False), (3, True)]
+    # an explicit bound is the caller's, not limited by the cap
+    assert len(_never_converges(spark, 7, cap=5)) == 7
+    assert _never_converges(spark, 0) == []
+
+
+def test_start_continues_numbering(spark):
+    got = [r.n for r in fixpoint_rounds(spark, "resumed", 6, start=4)]
+    assert got == [5, 6]
+
+
+def test_round_width_is_read_at_loop_start_and_restored(spark):
+    before = spark.conf.get(_PARTITIONS)
+    with scoped_shuffle_partitions(spark, 3):
+        for r in fixpoint_rounds(spark, "outer", 1):
+            assert r.session_width == 3
+            with r.width(10**9):
+                assert spark.conf.get(_PARTITIONS) == "3"  # capped
+            with r.width(5):
+                assert spark.conf.get(_PARTITIONS) == "1"
+            assert spark.conf.get(_PARTITIONS) == "3"
+    assert spark.conf.get(_PARTITIONS) == before
+
+
+def test_rounds_label_jobs_and_restore_the_caller(spark):
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        for outer in fixpoint_rounds(spark, "outer", 2):
+            assert sc.getLocalProperty(_DESCRIPTION) == f"outer:{outer.n}"
+            for inner in fixpoint_rounds(spark, "inner", 3):
+                assert sc.getLocalProperty(_DESCRIPTION) == f"inner:{inner.n}"
+                if inner.n == 2:
+                    break
+            assert sc.getLocalProperty(_DESCRIPTION) == f"outer:{outer.n}"
+        assert sc.getLocalProperty(_DESCRIPTION) == "caller"
+        with pytest.raises(RuntimeError):
+            for _ in fixpoint_rounds(spark, "never_converges", cap=2):
+                pass
+        assert sc.getLocalProperty(_DESCRIPTION) == "caller"
+    finally:
+        sc.setJobDescription(None)
+
+
+def test_conf_scopes_from_two_threads_restore_the_originals(spark):
+    """B tries to enter its scopes while A holds its own, and leaves
+    only after A has left.  Interleaved, B would save A's values and
+    restore them last, leaving the session at A's values for good."""
+    original = (spark.conf.get(_PARTITIONS), spark.conf.get(_AQE))
+    a_inside, b_started, a_done = (threading.Event() for _ in range(3))
+    errors = []
+
+    def a():
+        try:
+            with scoped_shuffle_partitions(spark, 3), no_aqe(spark):
+                # re-entrant in one thread, as MST→CC nests
+                with scoped_shuffle_partitions(spark, 4):
+                    pass
+                a_inside.set()
+                b_started.wait(10)
+                time.sleep(0.3)  # time for B to enter if nothing stops it
+                assert spark.conf.get(_PARTITIONS) == "3"
+        except Exception as exc:  # reported by the main thread
+            errors.append(exc)
+        finally:
+            a_done.set()
+
+    def b():
+        a_inside.wait(10)
+        b_started.set()
+        with scoped_shuffle_partitions(spark, 5), no_aqe(spark):
+            a_done.wait(10)
+
+    threads = [threading.Thread(target=a), threading.Thread(target=b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(30)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert (spark.conf.get(_PARTITIONS), spark.conf.get(_AQE)) == original
+
+
+# the seven modules whose loops run on the driver
+_MIGRATED = ("cc", "kcore", "truss", "mis", "matching", "densest", "mst")
+_BANNED = {"scoped_shuffle_partitions", "adaptive_shuffle_partitions"}
+_CAP_NAME = re.compile(r"CAP|RAIL|ROUND", re.IGNORECASE)
+
+
+@pytest.mark.parametrize("module", _MIGRATED)
+def test_migrated_modules_keep_no_width_or_cap_of_their_own(module):
+    """Source scan, no Spark: width and caps belong to graph/rounds.py."""
+    path = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "sparkgatha" / "graph" / f"{module}.py"
+    )
+    tree = ast.parse(path.read_text())
+    for node in ast.walk(tree):
+        name = (
+            getattr(node, "id", None) if isinstance(node, ast.Name)
+            else getattr(node, "attr", None) if isinstance(node, ast.Attribute)
+            else getattr(node, "name", None) if isinstance(node, ast.alias)
+            else None
+        )
+        assert name not in _BANNED, f"{module}.py:{node.lineno} uses {name}"
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)) and isinstance(
+            node.value, ast.Constant
+        ) and isinstance(node.value.value, int):
+            targets = node.targets if isinstance(node, ast.Assign) else [
+                node.target
+            ]
+            for t in targets:
+                assert not _CAP_NAME.search(getattr(t, "id", "")), (
+                    f"{module}.py:{node.lineno} defines a round cap {t.id}"
+                )
+
+
+def test_cc_fixpoint_mode_matches_networkx(spark):
+    triples = random_graph(n=40, m=45, seed=7)
+    edges = to_spark_edges(spark, triples, symmetric=True)
+    got = {
+        r["vertex"]: r["component"]
+        for r in connected_components(edges, max_iter=None).collect()
+    }
+    g = nx_graph(triples)
+    assert len(got) == g.number_of_nodes()
+    for comp in nx.connected_components(g):
+        for v in comp:
+            assert got[v] == min(comp)

@@ -8,26 +8,32 @@ k-truss is always a subgraph of the (k−1)-core but far denser —
 AGATHA-style hub terms survive coring on raw degree alone, while truss
 peeling also demands their neighborhoods interlock.
 
-Synchronous peel, the k-core discipline (graph/kcore.py):
+Synchronous peel, the k-core discipline (graph/kcore.py), run over a
+triangle table enumerated ONCE (the G7 degree-oriented wedge join,
+hub-safe) instead of re-running the wedge join every round:
 
-    repeat:  support(e) = #triangles through e  (degree-oriented wedge
-             join — the G7 triangle machinery, so hot vertices never
-             explode the self-join);  drop edges with support < k−2
+    T_0 = the triangles of the canonical edge set E_0
+    repeat:  E_r = {e : support of e over T_{r−1} >= k−2}
+             T_r = the triangles of T_{r−1} whose three edges are in E_r
 
-Monotonicity gives the same free convergence test as k-core: a round
-drops an edge iff the edge count changes, so an unchanged count on the
-checkpointed set IS the fixpoint — no extra shuffle.  ``max_iter``
-follows the round and cap policy of graph/rounds.py (extra fixed rounds
-past the fixpoint are no-ops).
+Every triangle of E_r is a triangle of E_{r−1}, so T_r is exactly the
+triangle set of E_r, and each round is one window count + one group-by
+over the surviving triangles — no degrees, no orientation, no wedge
+self-join.  T only shrinks, so an unchanged triangle count IS the
+fixpoint (the next E would equal this one).  ``max_iter`` follows the
+round and cap policy of graph/rounds.py (extra fixed rounds past the
+fixpoint are no-ops).
 
-Output: (u, v, support) — canonical u < v edges of the k-truss with
-their final within-truss support.  Exact bar: edge set equals
-``networkx.k_truss`` (golden-tested).
+Output: (u, v, support) — canonical u < v edges of E_last with their
+support over T_last.  E_last is derived from T_{last−1}, not read off
+T_last: in fixed-round mode an edge of E_N whose last triangle died in
+round N is still in the output, with support 0.  Exact bar: edge set
+equals ``networkx.k_truss`` (golden-tested).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.rounds import fixpoint_rounds, width
@@ -35,25 +41,46 @@ from sparkgatha.graph.triangles import _degrees, _orient, _triangles
 from sparkgatha.util import checkpoint_reset_stats, no_aqe
 
 
-def _edge_support(und: DataFrame) -> DataFrame:
-    """(u, v, support) per canonical undirected edge: the number of
-    triangles the edge participates in — the G7 degree-oriented wedge
-    enumeration (triangles._triangles, hub-safe, one row per triangle)
-    projected onto the three edges of each triangle."""
-    o = _orient(und, _degrees(und))
-    tris = _triangles(o)  # (p, x, y)
-    sides = (
-        tris.select(
-            F.least("p", "x").alias("u"), F.greatest("p", "x").alias("v")
-        )
-        .unionByName(
-            tris.select(
-                F.least("p", "y").alias("u"), F.greatest("p", "y").alias("v")
-            )
-        )
-        .unionByName(tris.select(F.col("x").alias("u"), F.col("y").alias("v")))
+def _triangle_table(und: DataFrame) -> DataFrame:
+    """(a, b, c), a < b < c: one row per triangle of a canonical edge
+    set, i.e. its three canonical edges (a, b), (a, c), (b, c)."""
+    t = _triangles(_orient(und, _degrees(und)))  # (p, x, y), x < y
+    return t.select(
+        F.least("p", "x").alias("a"),
+        F.greatest("x", F.least("p", "y")).alias("b"),
+        F.greatest("p", "y").alias("c"),
     )
-    return sides.groupBy("u", "v").agg(F.count("*").alias("support"))
+
+
+def _triangle_edges(tris: DataFrame) -> DataFrame:
+    """(a, b, c, u, v): each triangle once per canonical edge."""
+    return tris.selectExpr(
+        "a", "b", "c",
+        "inline(array(named_struct('u', a, 'v', b), "
+        "named_struct('u', a, 'v', c), named_struct('u', b, 'v', c)))",
+    )
+
+
+def _support(tris: DataFrame) -> DataFrame:
+    """(u, v, support): triangles of ``tris`` through each edge."""
+    return (
+        _triangle_edges(tris)
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("support"))
+    )
+
+
+def _peel(tris: DataFrame, need: int) -> DataFrame:
+    """The triangles of ``tris`` whose three edges each close at least
+    ``need`` triangles of ``tris``."""
+    return (
+        _triangle_edges(tris)
+        .withColumn("support", F.count("*").over(W.partitionBy("u", "v")))
+        .groupBy("a", "b", "c")
+        .agg(F.min("support").alias("weakest"))
+        .filter(F.col("weakest") >= need)
+        .select("a", "b", "c")
+    )
 
 
 def k_truss(
@@ -72,35 +99,34 @@ def k_truss(
     spark = edges.sparkSession
     need = k - 2
     with no_aqe(spark):
-        # checkpoint_reset_stats, NOT a plain localCheckpoint: the wedge
-        # join references the edge set ~12 times per round, and plain
-        # checkpoints inherit compounding sizeInBytes estimates that OOM
-        # the planner by round ~12 (see the helper's docstring)
+        # checkpoint_reset_stats, NOT a plain localCheckpoint: the peel
+        # rounds chain on the previous round's table, and plain
+        # checkpoints inherit compounding sizeInBytes estimates (see the
+        # helper's docstring)
         und = checkpoint_reset_stats(canonical_undirected(edges))
         n_edges = und.count()
-        for r in fixpoint_rounds(spark, "k_truss", max_iter):
-            if n_edges == 0:
-                break
-            # r6: size this round's exchanges to the surviving edge set
-            # (integer supports + anti/left joins — results are
-            # partitioning-independent; see util.adaptive_shuffle_
-            # partitions)
-            with r.width(n_edges):
-                sup = _edge_support(und)
-                kept = checkpoint_reset_stats(
-                    und.join(sup, ["u", "v"], "left")
-                    .filter(F.coalesce("support", F.lit(0)) >= need)
-                    .select("u", "v")
-                )
-                n_kept = kept.count()
-            if n_kept == n_edges:
-                und = kept
-                break
-            und, n_edges = kept, n_kept
         with width(spark, n_edges):
-            out = checkpoint_reset_stats(
-                und.join(_edge_support(und), ["u", "v"], "left").select(
+            tris = checkpoint_reset_stats(_triangle_table(und))
+        n_tris = tris.count()
+        keep = und  # k = 2 peels nothing: every edge is in the truss
+        if need > 0:
+            for r in fixpoint_rounds(spark, "k_truss", max_iter):
+                # one exchange row per (triangle, edge)
+                with r.width(3 * n_tris):
+                    nxt = checkpoint_reset_stats(_peel(tris, need))
+                    n_nxt = nxt.count()
+                prev, tris = tris, nxt
+                if n_nxt == n_tris:
+                    break
+                n_tris = n_nxt
+            keep = (
+                _support(prev)
+                .filter(F.col("support") >= need)
+                .select("u", "v")
+            )
+        with width(spark, n_edges):
+            return checkpoint_reset_stats(
+                keep.join(_support(tris), ["u", "v"], "left").select(
                     "u", "v", F.coalesce("support", F.lit(0)).alias("support")
                 )
             )
-        return out

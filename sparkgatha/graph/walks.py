@@ -471,18 +471,21 @@ def weighted_walks(
             .sortWithinPartitions("src")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # ADVICE r5: a non-positive or null aggregated weight silently
+        # a non-positive, null or NaN aggregated weight silently
         # corrupts the exponential race (-ln(u)/w inverts for w < 0,
-        # yields ±inf for w == 0, null for null) — refuse loudly, like
-        # the other parameter guards
+        # yields ±inf for w == 0, null for null, NaN for NaN) — refuse
+        # loudly, like the other parameter guards.  isnan is needed:
+        # Spark orders NaN above every double, so NaN <= 0 is false
         n_bad = we.filter(
-            F.col("weight").isNull() | (F.col("weight") <= 0)
+            F.col("weight").isNull()
+            | F.isnan("weight")
+            | (F.col("weight") <= 0)
         ).count()
         if n_bad:
             we.unpersist()
             raise ValueError(
                 f"weighted_walks: {n_bad} (src, dst) rows have a "
-                "non-positive or null aggregated weight — "
+                "non-positive, null or NaN aggregated weight — "
                 "weight-proportional sampling is only defined for "
                 "strictly positive weights"
             )

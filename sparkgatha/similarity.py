@@ -17,6 +17,8 @@ The Spark-native ladder:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame, Window as W, functions as F
 
@@ -156,8 +158,6 @@ def auto_lsh_planes(n: int, target_bucket: int = 64) -> int:
     of corpus size.  The sqrt/log rules here and in auto_ivf_params are
     COMPUTED from corpus stats (not documented prose) so a 100 TB call
     with the defaults does not inherit fixture-tuned constants."""
-    import math
-
     return max(1, math.ceil(math.log2(max(2.0, n / target_bucket))))
 
 
@@ -165,8 +165,6 @@ def auto_ivf_params(n: int) -> tuple[int, int]:
     """(n_centroids, nprobe) = (~sqrt(n), ~sqrt(n_centroids)) — the
     standard IVF sizing (FAISS guidance: nlist ~ sqrt(n)); candidate
     volume per query ~ n * nprobe / n_centroids ~ n^(3/4)."""
-    import math
-
     n_centroids = max(4, int(round(math.sqrt(max(16, n)))))
     nprobe = max(2, int(round(math.sqrt(n_centroids))))
     return n_centroids, nprobe
@@ -554,6 +552,51 @@ def q_ivf_topk(spark, sf_dir):
     )
 
 
+def _sql_double(x: float) -> str:
+    """Spark SQL text that parses back to exactly the double ``x``:
+    ``repr`` is the shortest decimal that round-trips and the ``D``
+    suffix makes it a DOUBLE literal (without it ``0.5`` is a
+    DECIMAL); NaN and ±inf have no literal form, so they are cast."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _sq_dist_sql(vec: str, c) -> str:
+    """SQL text of the squared Euclidean distance between the array
+    expression ``vec`` and the point ``c`` — the sequential left fold
+    Σ(a−b)² the DuckDB oracles replay.  Centroids, codebooks and cell
+    probes are built as ONE ``F.expr`` of this text: every PySpark
+    Column call is a py4j round trip, so composing k·d literals
+    column by column costs thousands of them per expression."""
+    lits = ", ".join(_sql_double(x) for x in c)
+    return (
+        f"aggregate(zip_with({vec}, array({lits}), "
+        "(a, b) -> (a - b) * (a - b)), 0D, (s, x) -> s + x)"
+    )
+
+
+def _choices_sql(vec: str, cents) -> str:
+    """array of (d, cid) structs, d = round(sqrt(Σ(a−b)²), 8): the
+    rounded distances from ``vec`` to every centroid, in cid order."""
+    return "array({})".format(
+        ", ".join(
+            f"named_struct('d', round(sqrt({_sq_dist_sql(vec, c)}), 8), "
+            f"'cid', {cid})"
+            for cid, c in enumerate(cents)
+        )
+    )
+
+
+def _assign_sql(vec: str, cents) -> str:
+    """The kmeans_lloyd assignment as SQL text — argmin over
+    round(sqrt(Σ(a−b)²), 8) with cid tie-break, the exact rule the
+    unrolled oracle replays — reusable wherever a trained codebook
+    must re-assign rows map-only (PQ encoding)."""
+    return f"array_min({_choices_sql(vec, cents)}).cid"
+
+
 def _round_away(x: float, d: int) -> float:
     """Driver-side decimal rounding that mirrors DuckDB's DOUBLE
     ``round()``: scale by 10^d, round half AWAY from zero on the
@@ -564,8 +607,6 @@ def _round_away(x: float, d: int) -> float:
     centroid literals built with round() would break kmeans_lloyd's
     bit-identical-across-engines guarantee exactly at the float32
     values most likely to be midpoints."""
-    import math
-
     s = x * (10.0 ** d)
     return (
         math.floor(s + 0.5) if s >= 0 else math.ceil(s - 0.5)
@@ -602,12 +643,13 @@ def kmeans_lloyd(
 
     Scale shape (the Lloyd classic): centroids are a k·d driver-side
     artifact BY DEFINITION, so each round is one bounded k·d collect +
-    a map-only literal-expression assignment (NO join — the centroid
-    array rides the plan as literals, the q_lm_perplexity pattern) +
-    one partial-aggregable groupBy with d element-wise sum aggregates
-    (no coordinate explode: a 10^9-row corpus shuffles k·d doubles,
-    not 10^9·d rows).  The input projection is persisted once across
-    the rounds.
+    a map-only assignment (NO join — the centroids are double literals
+    in one SQL expression, ``_assign_sql``, sent to the JVM in a
+    single call instead of one py4j round trip per coordinate) + one
+    partial-aggregable groupBy with d element-wise sum aggregates (no
+    coordinate explode: a 10^9-row corpus shuffles k·d doubles, not
+    10^9·d rows).  The input projection is persisted once across the
+    rounds.
 
     Returns (assignments DataFrame (id, cluster int), centroids list
     of k lists) — the assignment is the final round's, computed
@@ -641,52 +683,24 @@ def kmeans_lloyd(
         cents = [[_round_away(x, 6) for x in r["v"]] for r in seeds]
         dim = len(cents[0])
         assign = None
-        for r in range(1, rounds + 1):
-            choices = F.array(
-                *[
-                    F.struct(
-                        F.round(
-                            F.sqrt(
-                                F.aggregate(
-                                    F.zip_with(
-                                        "v",
-                                        F.array(*[F.lit(x) for x in c]),
-                                        lambda a, b: (a - b) * (a - b),
-                                    ),
-                                    F.lit(0.0),
-                                    lambda s, x: s + x,
-                                )
-                            ),
-                            8,
-                        ).alias("d"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, c in enumerate(cents)
-                ]
+        sums = F.expr(
+            "array({})".format(
+                ", ".join(f"sum(element_at(v, {i}))" for i in range(1, dim + 1))
             )
+        )
+        for r in range(1, rounds + 1):
             assign = ev.select(
-                "vec_id",
-                F.array_min(choices).getField("cid").alias("cluster"),
-                "v",
+                "vec_id", F.expr(_assign_sql("v", cents)).alias("cluster"), "v"
             )
             if r == rounds:
                 break
             stats = (
                 assign.groupBy("cluster")
-                .agg(
-                    F.count("*").alias("n"),
-                    *[
-                        F.sum(F.element_at("v", i + 1)).alias(f"s{i}")
-                        for i in range(dim)
-                    ],
-                )
+                .agg(F.count("*").alias("n"), sums.alias("s"))
                 .collect()
             )
             got = {
-                row["cluster"]: [
-                    _round_away(row[f"s{i}"] / row["n"], 6)
-                    for i in range(dim)
-                ]
+                row["cluster"]: [_round_away(s / row["n"], 6) for s in row["s"]]
                 for row in stats
             }
             cents = [got.get(cid, cents[cid]) for cid in range(k)]
@@ -819,12 +833,12 @@ def semdedup(
     though b is gone), but the rule is a pure EXISTS both engines
     evaluate identically — no sequential state.
 
-    Scale shape: kmeans_lloyd's map-only assignment (centroids ride as
-    literals), then ONE hash-partitioned self-join keyed on the
-    cluster id — co-located, no broadcast of the big side — with the
-    cheap id inequality + cosine filter inside the join, then an
-    anti-join back onto the assignment.  Cosine is a JVM fold over the
-    double arrays (no Python).
+    Scale shape: kmeans_lloyd's map-only assignment (one SQL expression
+    over the centroid literals), then ONE hash-partitioned self-join
+    keyed on the cluster id — co-located, no broadcast of the big side
+    — with the cheap id inequality + cosine filter inside the join,
+    then an anti-join back onto the assignment.  Cosine is a JVM fold
+    over the double arrays (no Python).
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -1093,36 +1107,6 @@ def q_sq8_topk(spark, sf_dir):
     return sq8_topk(e, k=5, coarse_c=20, n_queries=8)
 
 
-def _kmeans_assign_expr(vexpr, cents):
-    """The kmeans_lloyd assignment as a pure literal expression —
-    argmin over round(sqrt(Σ(a−b)²), 8) with cid tie-break, the exact
-    rule the unrolled oracle replays — reusable wherever a trained
-    codebook must re-assign rows map-only (PQ encoding)."""
-    choices = F.array(
-        *[
-            F.struct(
-                F.round(
-                    F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                vexpr,
-                                F.array(*[F.lit(x) for x in c]),
-                                lambda a, b: (a - b) * (a - b),
-                            ),
-                            F.lit(0.0),
-                            lambda s, x: s + x,
-                        )
-                    ),
-                    8,
-                ).alias("d"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, c in enumerate(cents)
-        ]
-    )
-    return F.array_min(choices).getField("cid")
-
-
 def pq_train_encode(
     embeddings: DataFrame,
     m: int = 4,
@@ -1144,10 +1128,11 @@ def pq_train_encode(
     same bounded class as kmeans centroids).
 
     Scale shape: training is m independent kmeans runs over SLICED
-    projections of one persisted scan (each round a map-only literal
+    projections of one persisted scan (each round a map-only
     assignment + one partial-aggregable groupBy — kmeans_lloyd's
     contract); encoding is ONE map-only projection computing all m
-    argmins from codebook literals — no joins, no Python.
+    argmins from codebook literals, built as one SQL expression — no
+    joins, no Python.
     """
     if m < 1 or dim % m != 0:
         raise ValueError(f"m must divide dim: m={m}, dim={dim}")
@@ -1156,11 +1141,11 @@ def pq_train_encode(
         F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
     )
 
-    # r6: the m subspace trainings are fully independent (separate
-    # slices, separate codebooks) and their cost is dominated by
-    # driver-side planning of the literal-heavy assignment expressions
-    # — run them concurrently so analysis/collect rounds overlap
-    # (guide §2.6); each training's numbers are untouched.
+    # the m subspace trainings are fully independent (separate slices,
+    # separate codebooks) and each is a chain of small collect jobs —
+    # run them concurrently so one training's planning and collects
+    # overlap another's (guide §2.6); each training's numbers are
+    # untouched.
     def _train(j: int):
         sub = ev.select(
             "vec_id", F.slice("v", j * dsub + 1, dsub).alias("embedding")
@@ -1178,15 +1163,13 @@ def pq_train_encode(
             codebooks = list(pool.map(_train, range(m)))
     else:
         codebooks = [_train(0)]
-    code = F.array(
-        *[
-            _kmeans_assign_expr(
-                F.slice("v", j * dsub + 1, dsub), codebooks[j]
-            )
-            for j in range(m)
-        ]
+    code = "array({})".format(
+        ", ".join(
+            _assign_sql(f"slice(v, {j * dsub + 1}, {dsub})", book)
+            for j, book in enumerate(codebooks)
+        )
     )
-    return ev.select("vec_id", code.alias("code")), codebooks
+    return ev.select("vec_id", F.expr(code).alias("code")), codebooks
 
 
 def _pq_lut_expr(codebooks, dsub: int):
@@ -1194,28 +1177,16 @@ def _pq_lut_expr(codebooks, dsub: int):
     an array of (j, cid, d2i) structs, d2i = floor(d2*1e8 + .5) as
     BIGINT over codebook literals — shared by pq_topk and ivfpq_topk
     so the fixed-point rule can never drift between them."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                F.lit(cid).alias("cid"),
-                F.floor(
-                    F.aggregate(
-                        F.zip_with(
-                            F.slice("qv", j * dsub + 1, dsub),
-                            F.array(*[F.lit(x) for x in c]),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda s, x: s + x,
-                    )
-                    * F.lit(100000000.0)
-                    + F.lit(0.5)
-                ).cast("long").alias("d2i"),
+    return F.expr(
+        "array({})".format(
+            ", ".join(
+                f"named_struct('j', {j}, 'cid', {cid}, 'd2i', CAST(floor("
+                f"{_sq_dist_sql(f'slice(qv, {j * dsub + 1}, {dsub})', c)}"
+                " * 100000000D + 0.5D) AS BIGINT))"
+                for j, book in enumerate(codebooks)
+                for cid, c in enumerate(book)
             )
-            for j, book in enumerate(codebooks)
-            for cid, c in enumerate(book)
-        ]
+        )
     )
 
 
@@ -1468,32 +1439,10 @@ def ivfpq_topk(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     # probe: nprobe nearest cell centroids per query, the SAME rounded
-    # rule as the cell assignment (array_sort of (d, cid) structs over
+    # rule as the cell assignment (array_sort of the (d, cid) structs
+    # kmeans_lloyd takes the argmin of, one SQL expression over the
     # centroid literals, slice nprobe) — map-only, deterministic
-    cell_choices = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    F.round(
-                        F.sqrt(
-                            F.aggregate(
-                                F.zip_with(
-                                    "qv",
-                                    F.array(*[F.lit(x) for x in c]),
-                                    lambda a, b: (a - b) * (a - b),
-                                ),
-                                F.lit(0.0),
-                                lambda s, x: s + x,
-                            )
-                        ),
-                        8,
-                    ).alias("d"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, c in enumerate(cell_cents)
-            ]
-        )
-    )
+    cell_choices = F.expr(f"array_sort({_choices_sql('qv', cell_cents)})")
     probes = F.broadcast(
         q.select(
             "qid",

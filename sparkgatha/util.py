@@ -77,13 +77,15 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
     ``sizeInBytes`` (an unbounded BigInt) into the checkpointed
     ``LogicalRDD``'s computedStats.  In an iterative operator whose
     per-round plan references the previous round's checkpoint through
-    MANY joins (k-truss: the wedge join reads the edge set ~12 times),
-    the size-only estimator multiplies that inherited estimate per join,
-    so the stored BigInt COMPOUNDS exponentially across rounds —
-    measured here: ×3 in bit length per truss round, a ~600-digit
-    estimate by round 4, Toom-Cook BigInteger multiplies dominating
-    planning by round 10, and a driver heap OOM inside
-    SizeInBytesOnlyStatsPlanVisitor by round 12 — on a 200-edge graph.
+    MANY joins (Luby MIS, maximal matching, Borůvka MSF, SCC; k-truss
+    did this when every round re-ran the wedge join, reading the edge
+    set ~12 times), the size-only estimator multiplies that inherited
+    estimate per join, so the stored BigInt COMPOUNDS exponentially
+    across rounds — measured on that k-truss: ×3 in bit length per
+    round, a ~600-digit estimate by round 4, Toom-Cook BigInteger
+    multiplies dominating planning by round 10, and a driver heap OOM
+    inside SizeInBytesOnlyStatsPlanVisitor by round 12 — on a 200-edge
+    graph.
     (One-join-per-round loops like PageRank/CC only ADD ~63 bits per
     round, which is why they never trip this.)
 

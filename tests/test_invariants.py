@@ -434,6 +434,43 @@ def test_kmeans_matches_pure_python_lloyd(spark):
         kmeans_lloyd(e, k=100, rounds=1)
 
 
+def test_sql_double_literal_text_round_trips_bit_exact(spark):
+    """The centroid/codebook expressions are SQL text: every double
+    must parse back to the identical bits, including subnormals,
+    signed zero, the largest double and the non-finite values."""
+    import struct
+    import sys
+
+    from sparkgatha.similarity import _sql_double
+
+    values = [5e-05, 1e-06, -0.0, 1e16, 5e-324, 0.1 + 0.2,
+              sys.float_info.max, -123.456789, 0.257813,
+              float("nan"), float("inf"), float("-inf")]
+    row = spark.range(1).selectExpr(
+        *[f"{_sql_double(x)} AS c{i}" for i, x in enumerate(values)]
+    ).collect()[0]
+    for i, x in enumerate(values):
+        assert struct.pack(">d", row[f"c{i}"]) == struct.pack(">d", x), x
+
+
+def test_similarity_builds_no_per_coordinate_literal_arrays():
+    """Source scan, no Spark: a per-coordinate ``F.lit`` comprehension
+    costs one py4j round trip per coordinate — the centroid and
+    codebook expressions are built as SQL text instead."""
+    import pathlib
+    import re
+
+    src = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "sparkgatha" / "similarity.py"
+    ).read_text()
+    hits = [
+        i for i, line in enumerate(src.splitlines(), 1)
+        if re.search(r"F\.lit\(\w+\) for \w+ in", line)
+    ]
+    assert not hits, f"similarity.py lines {hits} build F.lit arrays"
+
+
 def test_semdedup_keeps_earliest_and_guards(spark):
     """Planted near-dup pairs: within a cell the smaller vec_id of a
     >=threshold pair survives and every later member is dropped;

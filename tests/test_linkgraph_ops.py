@@ -771,6 +771,44 @@ def test_k_truss_fixed_round_mode_truncates(spark):
     assert k_truss(df, 4).count() == 0
 
 
+def _truss_peel_reference(es, k, rounds):
+    """Synchronous peel in pure Python: {(u, v): support} after at
+    most ``rounds`` rounds, support counted within the kept edges."""
+    kept = {tuple(sorted(e)) for e in es if e[0] != e[1]}
+
+    def support(edge_set):
+        adj = {}
+        for a, b in edge_set:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        return {e: len(adj[e[0]] & adj[e[1]]) for e in edge_set}
+
+    for _ in range(rounds):
+        s = support(kept)
+        kept = {e for e in kept if s[e] >= k - 2}
+    return support(kept)
+
+
+def test_k_truss_fixed_rounds_match_reference_every_round(spark):
+    """Every fixed round count up to the fixpoint equals the pure-Python
+    synchronous peel, edges AND supports — including edges still in
+    E_N whose last triangle died in round N (support 0)."""
+    es = [(0, 4), (0, 7), (0, 9), (1, 2), (1, 4), (1, 5), (1, 6), (1, 9),
+          (2, 4), (2, 5), (2, 7), (2, 8), (3, 4), (3, 7), (3, 8), (4, 6),
+          (4, 7), (5, 6), (5, 7), (5, 8), (7, 8), (7, 9)]
+    df = spark.createDataFrame([(a, b, 1.0) for a, b in es],
+                               "src long, dst long, weight double")
+    fixpoint = _truss_peel_reference(es, 4, len(es))
+    rounds = next(n for n in range(1, len(es))
+                  if _truss_peel_reference(es, 4, n) == fixpoint)
+    assert rounds >= 3  # the graph needs a multi-round cascade
+    assert 0 in _truss_peel_reference(es, 4, 1).values()
+    for n in range(1, rounds + 1):
+        got = {(r["u"], r["v"]): r["support"]
+               for r in k_truss(df, 4, max_iter=n).collect()}
+        assert got == _truss_peel_reference(es, 4, n), n
+
+
 def test_scc_exactly_max_rounds_completes_and_self_loops_are_singletons(spark):
     """A graph needing EXACTLY max_rounds peels must complete (the
     betweenness rail rule), and a self-loop-only vertex is a singleton
@@ -2405,3 +2443,13 @@ def test_weighted_walks_rejects_bad_params(spark, triples):
         weighted_walks(edges, length=0)
     with pytest.raises(ValueError, match="walks_per_vertex"):
         weighted_walks(edges, length=2, walks_per_vertex=0)
+
+
+def test_weighted_walks_rejects_nan_weight(spark):
+    """NaN <= 0 is false in Spark, so the guard must test isnan too."""
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 1, 1.0), (2, 3, float("nan"))],
+        "src long, dst long, weight double",
+    )
+    with pytest.raises(ValueError, match="NaN"):
+        weighted_walks(edges, length=1)

@@ -39,13 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from sparkgatha.graph.rounds import fixpoint_rounds
 from sparkgatha.util import no_aqe
 
 
 def betweenness(
     edges: DataFrame,
     n_sources: int | None = None,
-    max_depth: int = 100,
     num_partitions: int = 32,
 ) -> DataFrame:
     """(vertex, betweenness) over the symmetrized ``edges`` read as an
@@ -54,9 +54,9 @@ def betweenness(
     otherwise the k md5-smallest vertices are the pivots and scores are
     scaled by n/k (Brandes-Pich deterministic sampling).
 
-    ``max_depth`` bounds the BFS depth (a safety rail, not a tuning
-    knob: it RAISES when exceeded rather than silently dropping the
-    deep tail of the dependency accumulation).
+    The BFS runs to its fixpoint (the frontier empties) under the round
+    and cap policy of graph/rounds.py, without its width: the
+    accumulation sums doubles, whose bits depend on the partitioning.
     """
     if n_sources is not None and n_sources < 1:
         raise ValueError(f"n_sources must be >= 1, got {n_sources}")
@@ -99,8 +99,7 @@ def betweenness(
             ).localCheckpoint(eager=True)
             layers = [frontier]  # layers[d]: (s, v, sigma) at depth d
             visited = frontier.select("s", "v").localCheckpoint(eager=True)
-            depth = 0
-            while True:
+            for _ in fixpoint_rounds(spark, "betweenness"):
                 nxt = (
                     layers[-1]
                     .join(adj, layers[-1].v == adj.src)
@@ -112,21 +111,11 @@ def betweenness(
                 )
                 if nxt.limit(1).count() == 0:
                     break
-                # Raise only when a NON-EMPTY frontier would exceed the
-                # rail — a graph whose eccentricity equals max_depth
-                # exactly is fully computable and must not trip it.
-                if depth + 1 > max_depth:
-                    raise RuntimeError(
-                        f"betweenness BFS exceeded max_depth={max_depth}; "
-                        "raise max_depth (the accumulation would silently "
-                        "lose the deep tail otherwise)"
-                    )
                 layers.append(nxt)
                 visited = (
                     visited.unionByName(nxt.select("s", "v"))
                     .localCheckpoint(eager=True)
                 )
-                depth += 1
             # ---- backward: dependency accumulation by layer ----------
             # delta finalizes layer by layer from the deepest inward;
             # deltas[d] rows: (s, v, delta) for layer-d vertices
@@ -136,7 +125,8 @@ def betweenness(
                     "s", "v", F.lit(0.0).alias("delta")
                 )
             }
-            for d in range(deepest - 1, -1, -1):
+            for r in fixpoint_rounds(spark, "betweenness_backward", deepest):
+                d = deepest - r.n
                 above = layers[d + 1].join(deltas[d + 1], ["s", "v"]).select(
                     "s",
                     F.col("v").alias("w"),

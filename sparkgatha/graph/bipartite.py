@@ -41,6 +41,7 @@ from pyspark.storagelevel import StorageLevel
 
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.paths import BROADCAST_FRONTIER_MAX
+from sparkgatha.graph.rounds import fixpoint_rounds
 from sparkgatha.util import no_aqe
 
 
@@ -65,7 +66,8 @@ def bipartite_color(
     not drained within ``max_iter`` supersteps — a silent truncation
     would mislabel the unreached tail.  ``max_iter`` bounds ecc(root) +
     1, exactly the bound the BFS phase of the previous two-phase design
-    carried, so callers' settings are unchanged."""
+    carried, so callers' settings are unchanged; the loop is a
+    fixed-round loop of graph/rounds.py."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     spark = edges.sparkSession
@@ -97,9 +99,8 @@ def bipartite_color(
         )
         frontier = state
         frontier_rows = state.count()
-        drained = frontier_rows == 0
-        for _ in range(max_iter):
-            if drained:
+        for _ in fixpoint_rounds(spark, "bipartite_color", max_iter):
+            if frontier_rows == 0:
                 break
             probe = (
                 F.broadcast(frontier)
@@ -146,12 +147,9 @@ def bipartite_color(
             )
             frontier_rows = merged.filter(F.col("_improved")).count()
             state = merged.select("vertex", "s")
-            if frontier_rows == 0:
-                drained = True
-                break
             frontier = merged.filter(F.col("_improved")).select("vertex", "s")
         layout.unpersist()
-    if not drained:
+    if frontier_rows != 0:
         raise RuntimeError(
             f"bipartite_color: propagation still active after "
             f"max_iter={max_iter} supersteps; raise max_iter "

@@ -20,19 +20,16 @@ Two paths, same recurrence:
     large the reach balls grow.  This is the same sketch-instead-of-set
     trade the engine already makes for distinct counts (A2 HLL variant).
 
-Both raise (never truncate silently) only via the caller-visible
-``hops`` bound — there is no hidden convergence cutoff.
+Both run exactly ``hops`` rounds (fixed-round loops of
+graph/rounds.py); there is no hidden convergence cutoff.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
+from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.util import no_aqe
 
 
 def _prep(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -75,7 +72,7 @@ def hop_neighborhood_exact(edges: DataFrame, hops: int) -> DataFrame:
         # REVERTED — the extra per-hop count job outweighed the
         # smaller exchanges on this operator's sub-2 s fixture walls
         # (bench.q_hop_neighborhood +0.5 s across three runs)
-        for _ in range(hops):
+        for _ in fixpoint_rounds(spark, "hop_neighborhood_exact", hops):
             step = (
                 reach.join(e, reach.v == e.src)
                 .select("s", F.col("dst").alias("v"))
@@ -107,20 +104,16 @@ def _min_hop_pairs(edges: DataFrame, hops: int) -> tuple[DataFrame, DataFrame]:
     # r6: exchanges sized to the growing seen-pair set (exact integer
     # hops + anti-joins, partitioning-independent); the per-layer count
     # already exists as the emptiness test
-    spark = edges.sparkSession
     n_seen = seen.count()
     n_e = e.count()
-    default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    for h in range(1, hops + 1):
-        with scoped_shuffle_partitions(
-            spark, adaptive_shuffle_partitions(max(n_seen, n_e), default_p)
-        ):
+    for r in fixpoint_rounds(edges.sparkSession, "min_hop_pairs", hops):
+        with r.width(max(n_seen, n_e)):
             nxt = (
                 frontier.join(e, frontier.v == e.src)
                 .select("s", F.col("dst").alias("v"))
                 .distinct()
                 .join(seen, ["s", "v"], "left_anti")
-                .select("s", "v", F.lit(h).alias("hop"))
+                .select("s", "v", F.lit(r.n).alias("hop"))
                 .localCheckpoint(eager=False)
             )
             n_nxt = nxt.count()
@@ -226,7 +219,7 @@ def neighborhood_function(
         # exchanges at this operator's fixture walls (bench.q_anf_sketch
         # +0.6 s across three runs); sketch rows are also byte-heavy,
         # so row-count sizing underestimates their partitions anyway
-        for _ in range(hops):
+        for _ in fixpoint_rounds(spark, "neighborhood_function", hops):
             gathered = (
                 e.join(state, e.dst == state.v)
                 .groupBy(F.col("src").alias("v"))

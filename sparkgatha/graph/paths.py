@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from sparkgatha.graph.rounds import fixpoint_rounds
 from sparkgatha.util import no_aqe
 
 #: frontier rows below which the relax join broadcasts the frontier
@@ -28,14 +29,13 @@ def min_dist_from_seeds(
     max_iter: int = 50,
     num_partitions: int = 32,
 ) -> tuple[DataFrame, bool]:
-    """Multi-source min-distance relaxation — the shared superstep loop
-    behind single-source ``shortest_paths`` and bipartite's
-    root-parity BFS.  ``seeds(vertex, distance)`` is the initial
-    frontier FRAME (any number of sources); returns ``(dist, drained)``
-    where ``dist(vertex, distance)`` covers every vertex reachable from
-    a seed and ``drained`` says whether the frontier emptied within
-    ``max_iter`` supersteps (callers choose their own exhaustion
-    policy: G9 returns the partial relaxation, bipartite raises).
+    """Multi-source min-distance relaxation — the superstep loop behind
+    ``shortest_paths`` and ``ego_hops``.  ``seeds(vertex, distance)`` is
+    the initial frontier FRAME (any number of sources); returns
+    ``(dist, drained)`` where ``dist(vertex, distance)`` covers every
+    vertex reachable from a seed and ``drained`` says whether the
+    frontier emptied within ``max_iter`` supersteps (a fixed-round loop
+    of graph/rounds.py; callers choose their own exhaustion policy).
 
     Physical discipline (G11): edges are hash(src)-partitioned and
     persisted ONCE; each superstep broadcasts the (small) frontier into
@@ -47,7 +47,6 @@ def min_dist_from_seeds(
     dist = seeds.select("vertex", "distance").localCheckpoint(eager=True)
     frontier = dist
     frontier_rows = dist.count()
-    drained = frontier_rows == 0
     with no_aqe(spark):
         layout = (
             edges.select("src", "dst", "weight")
@@ -58,18 +57,10 @@ def min_dist_from_seeds(
         # r6: superstep exchanges sized to the edge set (min-relaxation
         # is a pure per-row add + min-agg — the min is order-independent
         # even over doubles, so results are partitioning-independent)
-        from sparkgatha.util import (
-            adaptive_shuffle_partitions,
-            scoped_shuffle_partitions,
-        )
-
-        step_p = adaptive_shuffle_partitions(
-            n_edges, int(spark.conf.get("spark.sql.shuffle.partitions"))
-        )
-        for _ in range(max_iter):
-            if drained:
+        for r in fixpoint_rounds(spark, "min_dist_from_seeds", max_iter):
+            if frontier_rows == 0:
                 break
-            with scoped_shuffle_partitions(spark, step_p):
+            with r.width(n_edges):
                 probe = (
                     F.broadcast(frontier)
                     if frontier_rows <= BROADCAST_FRONTIER_MAX
@@ -102,14 +93,11 @@ def min_dist_from_seeds(
                 )
                 frontier_rows = merged.filter(F.col("_improved")).count()
                 dist = merged.select("vertex", "distance")
-                if frontier_rows == 0:
-                    drained = True
-                    break
                 frontier = merged.filter(F.col("_improved")).select(
                     "vertex", "distance"
                 )
         layout.unpersist()
-    return dist, drained
+    return dist, frontier_rows == 0
 
 
 def shortest_paths(
@@ -136,18 +124,12 @@ def shortest_paths(
 
 
 def pair_distance(
-    edges: DataFrame, a: int, b: int, max_iter: int = 50,
-    bidirectional: bool = True,
+    edges: DataFrame, a: int, b: int, max_iter: int = 50
 ) -> float | None:
-    """Topic-query shape: distance between two terms (SURVEY.md §3.2).
-
-    Default is the meet-in-the-middle search (the reference's analog is
-    a lazy bidirectional Dijkstra); ``bidirectional=False`` falls back
-    to a full SSSP + filter (the round-1 form, kept for oracles)."""
-    if bidirectional:
-        return pair_distance_bidirectional(edges, a, b, max_iter)
-    d = shortest_paths(edges, a, max_iter).filter(F.col("vertex") == b).collect()
-    return float(d[0]["distance"]) if d else None
+    """Topic-query shape: distance between two terms (SURVEY.md §3.2),
+    by the meet-in-the-middle search (the reference's analog is a lazy
+    bidirectional Dijkstra)."""
+    return pair_distance_bidirectional(edges, a, b, max_iter)
 
 
 def pair_distance_bidirectional(
@@ -174,6 +156,8 @@ def pair_distance_bidirectional(
     unsound under frontier Bellman-Ford's non-settled order.)
     Goal-direction: frontier rows and relax candidates at distance >=
     ``best`` are pruned — they cannot lie on a better a—b path.
+    ``max_iter`` bounds the expansions (a fixed-round loop of
+    graph/rounds.py).
     """
     spark = edges.sparkSession
     inf = float("inf")
@@ -203,7 +187,9 @@ def pair_distance_bidirectional(
         bwd = _init(b)
         best = 0.0 if a == b else inf
         sides = {"f": (fwd, fwd_layout, bwd), "b": (bwd, bwd_layout, fwd)}
-        for _ in range(max_iter):
+        for _ in fixpoint_rounds(
+            spark, "pair_distance_bidirectional", max_iter
+        ):
             if fwd["rows"] == 0 and bwd["rows"] == 0:
                 break
             if best <= min(fwd["min_f"], bwd["min_f"]):

@@ -17,8 +17,9 @@ Each outer round:
 
 Rounds needed = longest chain of SCCs whose root ids decrease along the
 chain — small on real link graphs (few deep decreasing chains), O(n)
-adversarial worst case (a path with strictly decreasing ids), which the
-``max_rounds`` rail turns into an explicit error instead of a hang.
+adversarial worst case (a path with strictly decreasing ids).  All four
+loops (peel, color, backward BFS, ``condensation_layers``' relaxation)
+follow the round and cap policy of graph/rounds.py.
 
 Every per-round state is eagerly localCheckpointed: lineage stays O(1)
 per round, and the loop is AQE-scoped off like the other superstep
@@ -33,38 +34,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from sparkgatha.util import (
-    adaptive_shuffle_partitions,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
+from sparkgatha.graph.rounds import fixpoint_rounds, width
+from sparkgatha.util import checkpoint_reset_stats, no_aqe
 
 
-def strongly_connected_components(
-    edges: DataFrame,
-    max_rounds: int = 100,
-    max_color_iter: int = 200,
-) -> DataFrame:
-    """(vertex, scc_id) over directed ``edges(src, dst, ...)``.
-
-    ``max_rounds`` bounds the outer peel loop, ``max_color_iter`` the
-    inner max-propagation fixpoint; both RAISE on exhaustion (a silent
-    cut would mislabel components)."""
-    if max_rounds < 1:
-        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    if max_color_iter < 1:
-        raise ValueError(
-            f"max_color_iter must be >= 1, got {max_color_iter}"
-        )
+def strongly_connected_components(edges: DataFrame) -> DataFrame:
+    """(vertex, scc_id) over directed ``edges(src, dst, ...)``.  Every
+    loop runs to its fixpoint or raises (graph/rounds.py) — a silent
+    cut would mislabel components."""
     spark = edges.sparkSession
     with no_aqe(spark):
         # r6: one materialization of the lazy input — the edge distinct
         # and the vertex universe each consumed `edges`, re-running its
         # whole upstream plan; exchanges sized to the materialized rows
         pre = edges.select("src", "dst").localCheckpoint(eager=True)
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        entry_p = adaptive_shuffle_partitions(pre.count(), default_p)
-        with scoped_shuffle_partitions(spark, entry_p):
+        with width(spark, pre.count()):
             e = (
                 pre.filter(F.col("src") != F.col("dst"))
                 .distinct()
@@ -87,22 +71,20 @@ def strongly_connected_components(
         # Spark job per superstep instead of two (the counts are full
         # scans on purpose: a limit() probe would materialize only some
         # partitions of the lazy checkpoint).
-        for _ in range(max_rounds):
+        for r in fixpoint_rounds(spark, "scc_peel"):
             n_verts = verts.count()
             if n_verts == 0:
                 break
             # r6: size this peel round's exchanges to the surviving
             # subgraph (all ops are exact integer min/max/anti-joins —
-            # partitioning-independent results)
-            with scoped_shuffle_partitions(
-                spark,
-                adaptive_shuffle_partitions(max(n_e, n_verts), default_p),
-            ):
+            # partitioning-independent results); the color and BFS
+            # loops below run at this round's width
+            with r.width(max(n_e, n_verts)):
                 # ---- 1. forward max-color fixpoint ----------------------
                 color = verts.select(
                     "v", F.col("v").alias("c")
                 ).localCheckpoint(eager=True)
-                for _ in range(max_color_iter):
+                for _ in fixpoint_rounds(spark, "scc_color"):
                     incoming = (
                         e.join(color, e.src == color.v)
                         .groupBy(F.col("dst").alias("v"))
@@ -123,18 +105,10 @@ def strongly_connected_components(
                     color = nxt.select("v", "c")
                     if changed == 0:
                         break
-                else:
-                    # convergence on the LAST allowed iteration is
-                    # success — only a still-changing coloring overruns
-                    if changed != 0:
-                        raise RuntimeError(
-                            "SCC coloring exceeded "
-                            f"max_color_iter={max_color_iter}"
-                        )
                 # ---- 2. backward BFS from roots per color class ---------
                 # members(v, c): v known to be in SCC(root of color c)
                 members = color.filter(F.col("v") == F.col("c"))
-                while True:
+                for _ in fixpoint_rounds(spark, "scc_bfs"):
                     # reversed step: (u → w) with w already a member and
                     # color(u) == the member's color → u joins that SCC
                     step = (
@@ -182,15 +156,6 @@ def strongly_connected_components(
                 # materialize + count: sizes the next round's exchanges
                 # (e only shrinks, so the count doubles as its action)
                 n_e = e.count()
-        else:
-            # a graph needing EXACTLY max_rounds peels is fully labeled —
-            # raise only if vertices genuinely remain
-            if verts.count() > 0:
-                raise RuntimeError(
-                    f"SCC peel loop exceeded max_rounds={max_rounds}; the "
-                    "remaining subgraph still has vertices (raise "
-                    "max_rounds)"
-                )
         if assigned is None:
             return spark.createDataFrame([], "vertex long, scc_id long")
         return assigned
@@ -230,9 +195,7 @@ def condensation(edges: DataFrame) -> DataFrame:
     return _cross_component_edges(strongly_connected_components(edges), edges)
 
 
-def condensation_layers(
-    edges: DataFrame, max_rounds: int | None = None
-) -> DataFrame:
+def condensation_layers(edges: DataFrame) -> DataFrame:
     """(scc_id, layer): longest-path topological layering of the SCC
     condensation DAG — layer 0 = source components, layer of any other
     component = 1 + max layer among its predecessors.  Components in
@@ -253,14 +216,11 @@ def condensation_layers(
     1-row layer-sum fetch that follows is the convergence check, a
     bounded extra job per round that only reads the cached blocks.
 
-    ``max_rounds=None`` (default) runs to the exact fixpoint with a
-    runaway rail at |C| rounds (a DAG can never need more — hitting it
-    means the input was not the output of ``condensation``); an
-    integer ``max_rounds`` RAISES if the fixpoint is not reached, never
-    returns a partial layering silently.
+    The loop runs to the exact fixpoint under graph/rounds.py with the
+    proven cap of |C| + 1 rounds (a DAG's depth is < |C|, plus the
+    round that sees no change): reaching it means the input was not
+    the output of ``condensation``, and it raises.
     """
-    from sparkgatha.util import checkpoint_reset_stats
-
     spark = edges.sparkSession
     with no_aqe(spark):
         labels = strongly_connected_components(edges)
@@ -276,16 +236,14 @@ def condensation_layers(
         # r6: the relaxation runs on the condensation (≤ #components
         # rows, usually tiny) — size its exchanges accordingly; exact
         # integer max/plus arithmetic, partitioning-independent
-        layer_p = adaptive_shuffle_partitions(
-            max(n_comps, ce.count()),
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-        )
-        with scoped_shuffle_partitions(spark, layer_p):
+        n_rows = max(n_comps, ce.count())
+        with width(spark, n_rows):
             state = comps.select("scc_id", F.lit(0).alias("layer"))
             state = checkpoint_reset_stats(state)
-        rail = max_rounds if max_rounds is not None else max(n_comps, 1)
         prev_sum = 0  # the all-zero start state's layer total
-        for r in range(rail + 1):
+        for r in fixpoint_rounds(
+            spark, "condensation_layers", cap=max(n_comps, 1) + 1
+        ):
             prop = (
                 ce.join(state, ce.src_scc == state.scc_id)
                 .groupBy(F.col("dst_scc").alias("scc_id"))
@@ -300,7 +258,7 @@ def condensation_layers(
                     ).alias("layer"),
                 )
             )
-            with scoped_shuffle_partitions(spark, layer_p):
+            with r.width(n_rows):
                 nxt = checkpoint_reset_stats(nxt)  # eager: round runs here
             # layers only ever grow, so an unchanged total IS the
             # fixpoint — a bounded 1-row fetch over the already-cached
@@ -308,10 +266,6 @@ def condensation_layers(
             new_sum = nxt.agg(F.sum("layer")).collect()[0][0] or 0
             state = nxt
             if new_sum == prev_sum:
-                return state.select("scc_id", "layer")
+                break
             prev_sum = new_sum
-        raise RuntimeError(
-            f"condensation_layers did not converge within {rail} rounds "
-            f"({n_comps} components) — was the input edge set cyclic "
-            "across components?"
-        )
+        return state.select("scc_id", "layer")

@@ -2543,7 +2543,7 @@ def q_condensation_layers(spark, sf_dir):
     else 1 + max predecessor layer: the explicit layer-parallel
     schedule for processing a cyclic link graph.  Value-checked
     against DuckDB's recursive walk (max depth from any source);
-    NetworkX golden + convergence rail in tests/test_linkgraph_ops.py."""
+    NetworkX golden in tests/test_linkgraph_ops.py."""
     from sparkgatha.graph.scc import condensation_layers
 
     _, id_edges = _bigram_digraph(spark, sf_dir)

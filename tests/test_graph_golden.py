@@ -237,10 +237,6 @@ def test_pair_distance_bidirectional_matches_dijkstra(spark, triples):
         spark, triples + [(900, 901, 1.0)], symmetric=True
     )
     assert pair_distance(iso, 0, 901) is None
-    # fallback path agrees
-    assert abs(
-        pair_distance(edges, 0, 7, bidirectional=False) - want_all[7]
-    ) < 1e-9
 
 
 def test_pagerank_powerlaw_hub(spark):

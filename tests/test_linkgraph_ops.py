@@ -8,6 +8,7 @@ NetworkX is the golden where its implementation is pure Python
 Python oracle in graph_helpers (networkx.hits needs scipy, absent
 in this sandbox)."""
 
+import functools
 import math
 
 import networkx as nx
@@ -519,19 +520,6 @@ def test_betweenness_rejects_bad_sources(spark):
         betweenness(edges, n_sources=0)
 
 
-def test_betweenness_eccentricity_exactly_max_depth_completes(spark):
-    """A graph whose BFS depth EQUALS max_depth is fully computable —
-    the rail must only trip when a non-empty frontier would exceed it
-    (regression: the check used to fire one layer early)."""
-    triples = [(i, i + 1, 1.0) for i in range(4)]  # path 0-1-2-3-4, ecc 4
-    edges = to_spark_edges(spark, triples, symmetric=True)
-    got = {r["vertex"]: r["betweenness"]
-           for r in betweenness(edges, max_depth=4).collect()}
-    assert got == {0: 0.0, 1: 3.0, 2: 4.0, 3: 3.0, 4: 0.0}
-    with pytest.raises(RuntimeError, match="max_depth"):
-        betweenness(edges, max_depth=3)
-
-
 # ---------------------------------------------------------------------------
 # graph statistics: assortativity + modularity
 # ---------------------------------------------------------------------------
@@ -638,12 +626,21 @@ def test_scc_shapes(spark):
         assert got == _nx_scc_labels(es)
 
 
-def test_scc_round_rails_raise(spark):
-    es = [(i + 1, i) for i in range(8)]  # 9 singleton SCCs, 9 peel rounds
+def test_scc_round_rails_raise(spark, monkeypatch):
+    """Under a 3-round cap the decreasing path (9 singleton SCCs; its
+    first coloring needs 9 rounds) raises naming the loop, never
+    returns a partial labeling."""
+    from sparkgatha.graph import rounds, scc
+
+    monkeypatch.setattr(
+        scc, "fixpoint_rounds",
+        functools.partial(rounds.fixpoint_rounds, cap=3),
+    )
+    es = [(i + 1, i) for i in range(8)]
     df = spark.createDataFrame([(a, b, 1.0) for a, b in es],
                                "src long, dst long, weight double")
-    with pytest.raises(RuntimeError, match="max_rounds"):
-        strongly_connected_components(df, max_rounds=3)
+    with pytest.raises(RuntimeError, match="scc_color did not reach"):
+        strongly_connected_components(df)
 
 
 def test_hop_neighborhood_exact_matches_networkx(spark):
@@ -809,25 +806,13 @@ def test_k_truss_fixed_rounds_match_reference_every_round(spark):
         assert got == _truss_peel_reference(es, 4, n), n
 
 
-def test_scc_exactly_max_rounds_completes_and_self_loops_are_singletons(spark):
-    """A graph needing EXACTLY max_rounds peels must complete (the
-    betweenness rail rule), and a self-loop-only vertex is a singleton
-    SCC, not an absent row."""
-    es = [(i + 1, i) for i in range(8)]  # 9 singleton SCCs, 9 peel rounds
-    df = spark.createDataFrame([(a, b, 1.0) for a, b in es],
-                               "src long, dst long, weight double")
-    got = {r["vertex"]: r["scc_id"]
-           for r in strongly_connected_components(df, max_rounds=9).collect()}
-    assert got == {v: v for v in range(9)}
+def test_scc_self_loops_are_singletons(spark):
+    """A self-loop-only vertex is a singleton SCC, not an absent row."""
     loop = spark.createDataFrame([(5, 5, 1.0), (1, 2, 1.0)],
                                  "src long, dst long, weight double")
-    got2 = {r["vertex"]: r["scc_id"]
-            for r in strongly_connected_components(loop).collect()}
-    assert got2 == {1: 1, 2: 2, 5: 5}
-    with pytest.raises(ValueError, match="max_rounds"):
-        strongly_connected_components(df, max_rounds=0)
-    with pytest.raises(ValueError, match="max_color_iter"):
-        strongly_connected_components(df, max_color_iter=0)
+    got = {r["vertex"]: r["scc_id"]
+           for r in strongly_connected_components(loop).collect()}
+    assert got == {1: 1, 2: 2, 5: 5}
 
 
 def test_neighborhood_ops_cover_self_loop_only_vertices(spark):
@@ -1794,17 +1779,14 @@ def test_condensation_layers_matches_networkx(spark, seed):
     assert got == _nx_condensation_layers(es)
 
 
-def test_condensation_layers_chain_of_cycles_and_rail(spark):
-    """cycle{1,2} -> 3 -> cycle{4,5}: layers 0/1/2; an under-budget
-    max_rounds raises instead of returning a partial layering."""
+def test_condensation_layers_chain_of_cycles(spark):
+    """cycle{1,2} -> 3 -> cycle{4,5}: layers 0/1/2."""
     es = [(1, 2), (2, 1), (2, 3), (3, 4), (4, 5), (5, 4)]
     df = spark.createDataFrame([(a, b, 1.0) for a, b in es],
                                "src long, dst long, weight double")
     got = {r["scc_id"]: r["layer"]
            for r in condensation_layers(df).collect()}
     assert got == {1: 0, 3: 1, 4: 2}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        condensation_layers(df, max_rounds=1)
 
 
 def test_hop_plot_path_graph_exact(spark):

@@ -2,7 +2,8 @@
 it builds on (util.scoped_shuffle_partitions / util.no_aqe).
 
 Every test here reads and sets session confs or local properties only;
-none launches a Spark job, except the CC golden at the bottom."""
+none launches a Spark job, except the CC golden and the empty-input
+cases at the bottom."""
 
 import ast
 import pathlib
@@ -15,8 +16,15 @@ import pytest
 
 from graph_helpers import nx_graph, random_graph, to_spark_edges
 
-from sparkgatha.graph import connected_components
+from sparkgatha.graph import betweenness, connected_components
+from sparkgatha.graph.bipartite import bipartite_color
+from sparkgatha.graph.neighborhood import harmonic_centrality
+from sparkgatha.graph.paths import shortest_paths
 from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.graph.scc import (
+    condensation_layers,
+    strongly_connected_components,
+)
 from sparkgatha.util import no_aqe, scoped_shuffle_partitions
 
 _PARTITIONS = "spark.sql.shuffle.partitions"
@@ -125,28 +133,37 @@ def test_conf_scopes_from_two_threads_restore_the_originals(spark):
     assert (spark.conf.get(_PARTITIONS), spark.conf.get(_AQE)) == original
 
 
-# the seven modules whose loops run on the driver
-_MIGRATED = ("cc", "kcore", "truss", "mis", "matching", "densest", "mst")
+# the modules whose loops run on the driver
+_MIGRATED = (
+    "cc", "kcore", "truss", "mis", "matching", "densest", "mst",
+    "scc", "betweenness", "neighborhood", "paths", "bipartite",
+)
 _BANNED = {"scoped_shuffle_partitions", "adaptive_shuffle_partitions"}
 _CAP_NAME = re.compile(r"CAP|RAIL|ROUND", re.IGNORECASE)
+_PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "sparkgatha"
 
 
-@pytest.mark.parametrize("module", _MIGRATED)
-def test_migrated_modules_keep_no_width_or_cap_of_their_own(module):
-    """Source scan, no Spark: width and caps belong to graph/rounds.py."""
-    path = (
-        pathlib.Path(__file__).resolve().parent.parent
-        / "sparkgatha" / "graph" / f"{module}.py"
-    )
-    tree = ast.parse(path.read_text())
-    for node in ast.walk(tree):
+def _width_uses(path):
+    """(line, name) of every reference to a width scope in ``path``."""
+    uses = []
+    for node in ast.walk(ast.parse(path.read_text())):
         name = (
             getattr(node, "id", None) if isinstance(node, ast.Name)
             else getattr(node, "attr", None) if isinstance(node, ast.Attribute)
             else getattr(node, "name", None) if isinstance(node, ast.alias)
             else None
         )
-        assert name not in _BANNED, f"{module}.py:{node.lineno} uses {name}"
+        if name in _BANNED:
+            uses.append((node.lineno, name))
+    return uses
+
+
+@pytest.mark.parametrize("module", _MIGRATED)
+def test_migrated_modules_keep_no_width_or_cap_of_their_own(module):
+    """Source scan, no Spark: width and caps belong to graph/rounds.py."""
+    path = _PACKAGE / "graph" / f"{module}.py"
+    assert not _width_uses(path)
+    tree = ast.parse(path.read_text())
     for node in tree.body:
         if isinstance(node, (ast.Assign, ast.AnnAssign)) and isinstance(
             node.value, ast.Constant
@@ -158,6 +175,18 @@ def test_migrated_modules_keep_no_width_or_cap_of_their_own(module):
                 assert not _CAP_NAME.search(getattr(t, "id", "")), (
                     f"{module}.py:{node.lineno} defines a round cap {t.id}"
                 )
+
+
+def test_only_the_round_driver_scopes_shuffle_width():
+    """Source scan, no Spark: outside util.py, which defines the width
+    scopes, only graph/rounds.py may use them."""
+    owners = {_PACKAGE / "util.py", _PACKAGE / "graph" / "rounds.py"}
+    found = {
+        str(path.relative_to(_PACKAGE)): uses
+        for path in sorted(_PACKAGE.rglob("*.py"))
+        if path not in owners and (uses := _width_uses(path))
+    }
+    assert not found
 
 
 def test_cc_fixpoint_mode_matches_networkx(spark):
@@ -172,3 +201,24 @@ def test_cc_fixpoint_mode_matches_networkx(spark):
     for comp in nx.connected_components(g):
         for v in comp:
             assert got[v] == min(comp)
+
+
+_ON_EMPTY = {
+    "strongly_connected_components": lambda e: [
+        strongly_connected_components(e)
+    ],
+    "condensation_layers": lambda e: [condensation_layers(e)],
+    "betweenness": lambda e: [betweenness(e)],
+    "bipartite_color": lambda e: list(vars(bipartite_color(e)).values()),
+    "shortest_paths": lambda e: [shortest_paths(e, 0)],
+    "harmonic_centrality": lambda e: [harmonic_centrality(e, 2)],
+}
+
+
+@pytest.mark.parametrize("op", sorted(_ON_EMPTY))
+def test_migrated_operators_on_empty_edges(spark, op):
+    """The zero-round and first-round-break paths: an empty edge frame
+    gives an empty result (shortest paths: the source alone)."""
+    edges = spark.createDataFrame([], "src long, dst long, weight double")
+    got = [tuple(r) for df in _ON_EMPTY[op](edges) for r in df.collect()]
+    assert got == ([(0, 0.0)] if op == "shortest_paths" else [])

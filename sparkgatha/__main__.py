@@ -184,7 +184,8 @@ def main(argv=None) -> int:
     ce = sub.add_parser(
         "centrality",
         help="eigenvector centrality export ((A + I) power iteration, "
-             "NetworkX semantics, L1-normalized)",
+             "NetworkX semantics, L1-normalized); raises if --tol is not "
+             "met within --max-iter rounds",
     )
     ce.add_argument("--graph", required=True)
     ce.add_argument("--out", required=True)
@@ -632,7 +633,7 @@ def main(argv=None) -> int:
         from pyspark.sql import functions as F
 
         from sparkgatha.construct import load_adjacency
-        from sparkgatha.graph.eigenvector import eigenvector_centrality
+        from sparkgatha.graph.power import eigenvector_centrality
 
         nodes, edges = load_adjacency(spark, args.graph)
         r = eigenvector_centrality(

@@ -8,9 +8,12 @@ from sparkgatha.graph.cc import connected_components
 from sparkgatha.graph.lpa import label_propagation
 from sparkgatha.graph.triangles import clustering_coefficients, triangle_counts
 from sparkgatha.graph.paths import pair_distance, shortest_paths
-from sparkgatha.graph.hits import hits
-from sparkgatha.graph.eigenvector import eigenvector_centrality
-from sparkgatha.graph.katz import katz_centrality, katz_l2
+from sparkgatha.graph.power import (
+    eigenvector_centrality,
+    hits,
+    katz_centrality,
+    katz_l2,
+)
 from sparkgatha.graph.kcore import core_numbers, k_core
 from sparkgatha.graph.linkpred import edge_similarity, link_prediction_features
 from sparkgatha.graph.walks import biased_walks, random_walks

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from sparkgatha.graph.rounds import fixpoint_rounds
+
 
 def louvain_move_round(
     edges: DataFrame, count_self_loops: bool = False
@@ -262,7 +264,11 @@ def louvain(edges: DataFrame, max_levels: int = 4) -> DataFrame:
     on a strictly smaller graph, so the first level dominates."""
     cur = edges.select("src", "dst", "weight")
     mapping = None  # (vertex, community) over the ORIGINAL vertex set
-    for _ in range(max(max_levels, 1)):
+    # fixed rounds of graph/rounds.py, for the louvain:<level> job
+    # labels only; a level that proposes no move ends the loop
+    for _ in fixpoint_rounds(
+        edges.sparkSession, "louvain", max(max_levels, 1)
+    ):
         labels, coarse = louvain_level(cur)
         if labels is None:
             break

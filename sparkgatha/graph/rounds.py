@@ -35,8 +35,14 @@ starts — not at import, because loops nest (MST runs CC inside its own
 round, coloring runs MIS) and an inner loop is capped at the outer
 round's width — and :meth:`Round.width` scopes a round's exchanges to
 ``adaptive_shuffle_partitions(rows, width)``.  Only for exact-arithmetic
-steps: the float-sum loops (PageRank, LPA, HITS, Katz, eigenvector)
-never use it, because partitioning changes the bits of a double sum.
+steps: the float-sum loops (PageRank, LPA, HITS, Katz, eigenvector,
+Louvain) never use it, because partitioning changes the bits of a
+double sum.  The power-iteration loops (graph/power.py: HITS, Katz,
+eigenvector) use the driver for their job labels and for the tol→cap
+mapping: ``tol > 0`` runs ``fixpoint_rounds(spark, op, None,
+cap=max_iter)``, so a loop still above ``tol`` after ``max_iter``
+rounds raises; ``tol=0.0`` runs exactly ``max_iter`` fixed rounds.
+Louvain's level loop uses it for labels only.
 
 Job labels: every Spark job a round launches carries the description
 ``<operator>:<round>``; the caller's description is restored when the

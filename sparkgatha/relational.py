@@ -3430,7 +3430,7 @@ def q_hits(spark, sf_dir):
     iteration (plus a converged NetworkX golden in
     tests/test_graph_golden.py)."""
     from sparkgatha.extract import extract_cooccurrence_edges
-    from sparkgatha.graph.hits import hits
+    from sparkgatha.graph.power import hits
 
     d = _t(spark, sf_dir, "documents")
     e = extract_cooccurrence_edges(d, text_col="text", max_terms_per_doc=None)
@@ -3446,7 +3446,7 @@ def _eigenvector_oracle_sql(rounds: int = 12) -> str:
     """Eigenvector centrality unrolled: k L1-normalized (A + I)·x
     rounds — the shifted matrix appears literally as the edge list
     UNION one unit self-loop per vertex, exactly the Spark plan's shape
-    (graph/eigenvector.py).  Runs over the sampled window-1 bigram
+    (graph/power.py).  Runs over the sampled window-1 bigram
     graph (_BIGRAM_CTE), NOT the full co-occurrence graph: the latter
     is COMPLETE on every fixture (q_kcore's discovery), where
     eigenvector centrality is uniformly 1/n — a vacuous value check.
@@ -3486,7 +3486,7 @@ def q_eigenvector(spark, sf_dir):
     power-iteration rounds vs the DuckDB unrolled iteration (plus a
     converged NetworkX golden in tests/test_linkgraph_ops.py)."""
     from sparkgatha.extract import extract_adjacency_edges, symmetrize
-    from sparkgatha.graph.eigenvector import eigenvector_centrality
+    from sparkgatha.graph.power import eigenvector_centrality
 
     d = _t(spark, sf_dir, "documents")
     sampled = d.filter(
@@ -3908,7 +3908,7 @@ def q_katz(spark, sf_dir):
     beta=1.0, zero start) vs the DuckDB unrolled iteration; converged
     NetworkX golden in tests/test_linkgraph_ops.py."""
     from sparkgatha.extract import extract_adjacency_edges, symmetrize
-    from sparkgatha.graph.katz import katz_centrality
+    from sparkgatha.graph.power import katz_centrality
 
     d = _t(spark, sf_dir, "documents")
     sampled = d.filter(

@@ -136,7 +136,7 @@ def lpa_oracle(triples, max_iter=20):
 
 def eigenvector_oracle(directed_edges, max_iter=50, tol=0.0, weighted=True):
     """Pure-Python (A + I)·x power iteration with L1 normalization per
-    round — the engine's exact semantics (graph/eigenvector.py).
+    round — the engine's exact semantics (graph/power.py).
     ``directed_edges``: (u, v) or (u, v, w) rows; pass both orientations
     for undirected graphs.  Returns ({v: score}, iterations)."""
     from collections import defaultdict
@@ -176,7 +176,7 @@ def katz_oracle(directed_edges, alpha=0.1, beta=1.0, max_iter=10,
                 weighted=True):
     """Pure-Python Katz iterate x ← alpha·Aᵀx + beta from the ZERO
     vector, UN-normalized — the engine's exact fixed-round semantics
-    (graph/katz.py).  ``directed_edges``: (u, v) or (u, v, w) rows; pass
+    (graph/power.py).  ``directed_edges``: (u, v) or (u, v, w) rows; pass
     both orientations for undirected graphs.  Returns {v: score} after
     exactly ``max_iter`` rounds."""
     from collections import defaultdict
@@ -324,7 +324,7 @@ def mis_oracle(pairs, seed=0, max_rounds=None):
 
 def hits_oracle(directed_edges, max_iter=30, tol=0.0):
     """Pure-Python HITS with L1 (sum-to-one) normalization after each
-    half-step — the engine's exact semantics (graph/hits.py; scipy is
+    half-step — the engine's exact semantics (graph/power.py; scipy is
     absent so networkx.hits is unusable here).  ``directed_edges``:
     iterable of (u, v) or (u, v, w) — weights ignored (classic
     unweighted HITS).  Returns ({v: hub}, {v: auth}, iterations)."""

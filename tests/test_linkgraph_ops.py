@@ -1,5 +1,5 @@
 """L2 goldens + unit tests for the round-4 link-graph additions:
-HITS (graph/hits.py), k-core (graph/kcore.py), link-prediction
+HITS (graph/power.py), k-core (graph/kcore.py), link-prediction
 features (graph/linkpred.py) and window-1 adjacency extraction
 (extract.extract_adjacency_edges).
 
@@ -87,29 +87,27 @@ def test_hits_pure_sink_and_source(spark):
     assert got[3][0] == 0.0  # no out-edges → no hub
 
 
-def test_hits_fixed_round_delta_finite_and_checkpoint_cadence(spark, triples):
+def test_hits_fixed_round_delta_finite(spark, triples):
     """delta must be a real number in fixed-round mode (it is the G13
-    convergence metric), and the checkpoint cadence knob must not
-    change values — only lineage shape."""
+    convergence metric)."""
     edges, _ = _directed(spark, triples)
-    r2 = hits(edges, max_iter=6, tol=0.0, checkpoint_every=2)
-    r3 = hits(edges, max_iter=6, tol=0.0, checkpoint_every=3)
-    assert math.isfinite(r2.delta) and r2.delta >= 0.0
-    assert r2.iterations == 6
-    g2 = {r["vertex"]: (r["hub"], r["authority"]) for r in r2.scores.collect()}
-    g3 = {r["vertex"]: (r["hub"], r["authority"]) for r in r3.scores.collect()}
-    assert set(g2) == set(g3)
-    for v in g2:
-        assert abs(g2[v][0] - g3[v][0]) < 1e-12, v
-        assert abs(g2[v][1] - g3[v][1]) < 1e-12, v
+    res = hits(edges, max_iter=6, tol=0.0)
+    assert math.isfinite(res.delta) and res.delta >= 0.0
+    assert res.iterations == 6
+
+
+def test_hits_tol_mode_raises_when_unconverged(spark, triples):
+    """tol mode never returns a truncated vector: max_iter rounds
+    without reaching tol raise, naming the operator."""
+    edges, _ = _directed(spark, triples)
+    with pytest.raises(RuntimeError, match="hits did not reach"):
+        hits(edges, max_iter=2, tol=1e-15)
 
 
 def test_hits_rejects_bad_max_iter(spark):
     edges = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, weight double")
     with pytest.raises(ValueError, match="max_iter"):
         hits(edges, max_iter=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        hits(edges, checkpoint_every=0)
 
 
 # ---------------------------------------------------------------------------
@@ -863,7 +861,7 @@ from graph_helpers import (  # noqa: E402
     undirected_both,
 )
 
-from sparkgatha.graph.eigenvector import eigenvector_centrality  # noqa: E402
+from sparkgatha.graph.power import eigenvector_centrality  # noqa: E402
 
 
 def test_eigenvector_fixed_rounds_match_oracle(spark, triples):
@@ -940,8 +938,14 @@ def test_eigenvector_rejects_bad_args(spark):
                                   "src long, dst long, weight double")
     with pytest.raises(ValueError, match="max_iter"):
         eigenvector_centrality(edges, max_iter=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        eigenvector_centrality(edges, checkpoint_every=0)
+
+
+def test_eigenvector_tol_mode_raises_when_unconverged(spark, triples):
+    edges = to_spark_edges(spark, triples, symmetric=True)
+    with pytest.raises(
+        RuntimeError, match="eigenvector_centrality did not reach"
+    ):
+        eigenvector_centrality(edges, max_iter=2, tol=1e-15)
 
 
 # ---------------------------------------------------------------------------
@@ -1321,7 +1325,7 @@ def test_luby_coloring_prefix_and_bad_args(spark, triples):
 
 from graph_helpers import katz_oracle, undirected_both  # noqa: E402
 
-from sparkgatha.graph.katz import katz_centrality, katz_l2  # noqa: E402
+from sparkgatha.graph.power import katz_centrality, katz_l2  # noqa: E402
 
 
 def test_katz_fixed_rounds_match_oracle(spark, triples):
@@ -1393,7 +1397,7 @@ def test_katz_divergent_alpha_raises(spark, triples):
     """tol-driven mode must RAISE on a diverging series (alpha beyond
     the spectral bound), never return the blowing-up vector."""
     edges = to_spark_edges(spark, triples, symmetric=True)
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="katz_centrality did not reach"):
         katz_centrality(edges, alpha=2.0, beta=1.0, max_iter=15, tol=1e-8)
 
 
@@ -1402,8 +1406,6 @@ def test_katz_rejects_bad_args(spark):
                                   "src long, dst long, weight double")
     with pytest.raises(ValueError, match="max_iter"):
         katz_centrality(edges, max_iter=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        katz_centrality(edges, checkpoint_every=0)
     with pytest.raises(ValueError, match="alpha"):
         katz_centrality(edges, alpha=0.0)
 

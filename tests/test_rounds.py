@@ -2,8 +2,8 @@
 it builds on (util.scoped_shuffle_partitions / util.no_aqe).
 
 Every test here reads and sets session confs or local properties only;
-none launches a Spark job, except the CC golden and the empty-input
-cases at the bottom."""
+none launches a Spark job, except the CC golden, the Louvain labels
+and the empty-input cases at the bottom."""
 
 import ast
 import pathlib
@@ -20,6 +20,11 @@ from sparkgatha.graph import betweenness, connected_components
 from sparkgatha.graph.bipartite import bipartite_color
 from sparkgatha.graph.neighborhood import harmonic_centrality
 from sparkgatha.graph.paths import shortest_paths
+from sparkgatha.graph.power import (
+    eigenvector_centrality,
+    hits,
+    katz_centrality,
+)
 from sparkgatha.graph.rounds import fixpoint_rounds
 from sparkgatha.graph.scc import (
     condensation_layers,
@@ -136,7 +141,7 @@ def test_conf_scopes_from_two_threads_restore_the_originals(spark):
 # the modules whose loops run on the driver
 _MIGRATED = (
     "cc", "kcore", "truss", "mis", "matching", "densest", "mst",
-    "scc", "betweenness", "neighborhood", "paths", "bipartite",
+    "scc", "betweenness", "neighborhood", "paths", "bipartite", "power",
 )
 _BANNED = {"scoped_shuffle_partitions", "adaptive_shuffle_partitions"}
 _CAP_NAME = re.compile(r"CAP|RAIL|ROUND", re.IGNORECASE)
@@ -203,6 +208,42 @@ def test_cc_fixpoint_mode_matches_networkx(spark):
             assert got[v] == min(comp)
 
 
+def test_louvain_levels_keep_their_label_around_the_nested_cc(
+    spark, monkeypatch
+):
+    """Each Louvain level's jobs carry ``louvain:<level>``, also after
+    the connected-components loop the level runs has ended."""
+    from sparkgatha.graph import louvain as lv
+
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty(_DESCRIPTION)
+    seen = []
+    level = lv.louvain_level
+
+    def labelled_level(cur):
+        before = sc.getLocalProperty(_DESCRIPTION)
+        out = level(cur)
+        seen.append((before, sc.getLocalProperty(_DESCRIPTION)))
+        return out
+
+    monkeypatch.setattr(lv, "louvain_level", labelled_level)
+    clique = [(i, j, 1.0) for i in range(4) for j in range(i + 1, 4)]
+    edges = spark.createDataFrame(
+        clique + [(a + 4, b + 4, w) for a, b, w in clique] + [(0, 4, 0.1)],
+        "src long, dst long, weight double",
+    )
+    lv.louvain(edges, max_levels=3).collect()
+    assert len(seen) >= 2  # a level that ran CC, then the final probe
+    for n, labels in enumerate(seen, 1):
+        assert labels == (f"louvain:{n}", f"louvain:{n}")
+    assert sc.getLocalProperty(_DESCRIPTION) == caller
+
+
+def _zero_rounds(result):
+    assert result.iterations == 0
+    return [result.scores]
+
+
 _ON_EMPTY = {
     "strongly_connected_components": lambda e: [
         strongly_connected_components(e)
@@ -212,6 +253,11 @@ _ON_EMPTY = {
     "bipartite_color": lambda e: list(vars(bipartite_color(e)).values()),
     "shortest_paths": lambda e: [shortest_paths(e, 0)],
     "harmonic_centrality": lambda e: [harmonic_centrality(e, 2)],
+    "hits": lambda e: _zero_rounds(hits(e)),
+    "katz_centrality": lambda e: _zero_rounds(katz_centrality(e)),
+    "eigenvector_centrality": lambda e: _zero_rounds(
+        eigenvector_centrality(e)
+    ),
 }
 
 

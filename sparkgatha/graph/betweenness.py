@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 
 def betweenness(
@@ -71,13 +71,11 @@ def betweenness(
         )
         adj.count()
         try:
-            verts = (
+            verts, n = materialize(
                 adj.select(F.col("src").alias("v"))
                 .unionByName(adj.select(F.col("dst").alias("v")))
                 .distinct()
-                .localCheckpoint(eager=True)
             )
-            n = verts.count()
             if n == 0:
                 return verts.select(
                     F.col("v").alias("vertex"),
@@ -100,16 +98,15 @@ def betweenness(
             layers = [frontier]  # layers[d]: (s, v, sigma) at depth d
             visited = frontier.select("s", "v").localCheckpoint(eager=True)
             for _ in fixpoint_rounds(spark, "betweenness"):
-                nxt = (
+                nxt, n_nxt = materialize(
                     layers[-1]
                     .join(adj, layers[-1].v == adj.src)
                     .select("s", F.col("dst").alias("v"), "sigma")
                     .join(visited, ["s", "v"], "left_anti")
                     .groupBy("s", "v")
                     .agg(F.sum("sigma").alias("sigma"))
-                    .localCheckpoint(eager=True)
                 )
-                if nxt.limit(1).count() == 0:
+                if n_nxt == 0:
                     break
                 layers.append(nxt)
                 visited = (

@@ -42,7 +42,7 @@ from pyspark.storagelevel import StorageLevel
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.paths import BROADCAST_FRONTIER_MAX
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 
 @dataclass
@@ -85,7 +85,7 @@ def bipartite_color(
         layout.count()  # materialize the one-time stationary layout
         # state: every vertex is its own candidate root at distance 0;
         # sym carries both directions so src covers every endpoint
-        state = (
+        state, frontier_rows = materialize(
             layout.select(F.col("src").alias("vertex"))
             .distinct()
             .select(
@@ -95,10 +95,8 @@ def bipartite_color(
                     F.lit(0).cast("long").alias("dist"),
                 ).alias("s"),
             )
-            .localCheckpoint(eager=True)
         )
         frontier = state
-        frontier_rows = state.count()
         for _ in fixpoint_rounds(spark, "bipartite_color", max_iter):
             if frontier_rows == 0:
                 break

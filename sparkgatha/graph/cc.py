@@ -48,7 +48,7 @@ from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.checkpoint import CheckpointManager
 from sparkgatha.graph.metrics import MetricsSink
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -143,13 +143,11 @@ def connected_components(
         from concurrent.futures import ThreadPoolExecutor
 
         def _build_vertices():
-            v = (
+            return materialize(
                 edges.select(F.col("src").alias("vertex"))
                 .unionByName(edges.select(F.col("dst").alias("vertex")))
                 .distinct()
-                .localCheckpoint(eager=True)
             )
-            return v, v.count()
 
         def _build_edges():
             e0, start = None, 0

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 
 @dataclass(frozen=True)
@@ -70,7 +70,7 @@ def densest_subgraph(
     spark = edges.sparkSession
     factor = 2.0 * (1.0 + epsilon)
     with no_aqe(spark):
-        e = canonical_undirected(edges).localCheckpoint(eager=True)
+        e, n_e = materialize(canonical_undirected(edges))
 
         def degrees(ed: DataFrame) -> DataFrame:
             return (
@@ -80,9 +80,7 @@ def densest_subgraph(
                 .agg(F.count("*").alias("deg"))
             )
 
-        n_e = e.count()
-        deg = degrees(e).localCheckpoint(eager=True)
-        n_v = deg.count()
+        deg, n_v = materialize(degrees(e))
         if n_e == 0:
             return DensestResult(
                 vertices=deg, density=0.0, best_round=0, rounds=0
@@ -96,20 +94,16 @@ def densest_subgraph(
             # r6: exchanges sized to the shrinking edge set (integer
             # degrees + semi-joins, partitioning-independent)
             with r.width(n_e):
-                e = (
+                e, n_e = materialize(
                     e.join(
                         keep.withColumnRenamed("vertex", "u"), "u", "left_semi"
-                    )
-                    .join(
+                    ).join(
                         keep.withColumnRenamed("vertex", "v"), "v", "left_semi"
                     )
-                    .localCheckpoint(eager=True)
                 )
-                n_e = e.count()
                 if n_e == 0:
                     break
-                deg = degrees(e).localCheckpoint(eager=True)
-                n_v = deg.count()
+                deg, n_v = materialize(degrees(e))
             if n_e / n_v > best_rho:
                 best, best_rho, best_round = deg, n_e / n_v, rnd
         return DensestResult(

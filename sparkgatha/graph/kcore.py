@@ -42,16 +42,17 @@ from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 
-def _peel(e: DataFrame, k: int, max_iter: int | None) -> DataFrame:
+def _peel(
+    e: DataFrame, n_prev: int, k: int, max_iter: int | None
+) -> tuple[DataFrame, int]:
     """Iterate the degree-≥-k filter over a checkpointed canonical edge
-    set under the graph/rounds.py policy.  Returns the surviving edge
-    set."""
-    n_prev = e.count()
+    set of ``n_prev`` rows under the graph/rounds.py policy.  Returns
+    the surviving edge set and its row count."""
     if n_prev == 0:
-        return e
+        return e, 0
     for r in fixpoint_rounds(e.sparkSession, "k_core", max_iter):
         # r6: size each peel round's exchanges to the surviving edge
         # set (integer degrees + semi-joins, partitioning-independent)
@@ -63,17 +64,15 @@ def _peel(e: DataFrame, k: int, max_iter: int | None) -> DataFrame:
                 .agg(F.count("*").alias("d"))
             )
             keep = deg.filter(F.col("d") >= k).select("x")
-            e = (
+            e, n = materialize(
                 e.join(keep.withColumnRenamed("x", "u"), "u", "left_semi")
                 .join(keep.withColumnRenamed("x", "v"), "v", "left_semi")
                 .select("u", "v")
-                .localCheckpoint(eager=True)
             )
-            n = e.count()
         if n == n_prev:
             break
         n_prev = n
-    return e
+    return e, n_prev
 
 
 def k_core(
@@ -101,9 +100,10 @@ def k_core(
             # — a cached/checkpointed table) and skip both the
             # normalization shuffle and the extra materialization
             e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            n = e.count()
         else:
-            e = canonical_undirected(edges).localCheckpoint(eager=True)
-        e = _peel(e, k, max_iter)
+            e, n = materialize(canonical_undirected(edges))
+        e, _ = _peel(e, n, k, max_iter)
         return (
             e.select(F.col("u").alias("vertex"))
             .unionByName(e.select(F.col("v").alias("vertex")))
@@ -122,7 +122,7 @@ def core_numbers(
     empties (or ``max_k``, a runaway bound for degenerate inputs)."""
     spark = edges.sparkSession
     with no_aqe(spark):
-        e = canonical_undirected(edges).localCheckpoint(eager=True)
+        e, n = materialize(canonical_undirected(edges))
         # every edge endpoint is at least in the 1-core
         labels = (
             e.select(F.col("u").alias("vertex"))
@@ -134,14 +134,14 @@ def core_numbers(
         k = 1
         while k < max_k:
             k += 1
-            e = _peel(e, k, max_iter)
+            e, n = _peel(e, n, k, max_iter)
+            if n == 0:
+                break
             survivors = (
                 e.select(F.col("u").alias("vertex"))
                 .unionByName(e.select(F.col("v").alias("vertex")))
                 .distinct()
             )
-            if survivors.limit(1).count() == 0:
-                break
             labels = (
                 labels.join(
                     survivors.select("vertex", F.lit(k).alias("k2")),

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.util import materialize
 
 
 def louvain_move_round(
@@ -204,16 +205,14 @@ def louvain_level(edges: DataFrame):
     # probe, CC's vertex universe AND CC's canonicalization; lazy, each
     # of those re-ran the whole gain join + argmax (measured ~2x 2.3 s
     # recompute jobs per level at 2e6 edges)
-    move_e = (
-        moves.filter(F.col("move_to") != F.col("vertex"))
-        .select(
+    move_e, n_moves = materialize(
+        moves.filter(F.col("move_to") != F.col("vertex")).select(
             F.col("vertex").alias("src"),
             F.col("move_to").alias("dst"),
             F.lit(1.0).alias("weight"),
         )
-        .localCheckpoint(eager=True)
     )
-    if move_e.limit(1).count() == 0:
+    if n_moves == 0:
         return None, cur
     sym = move_e.unionByName(
         move_e.select(

@@ -37,7 +37,7 @@ from pyspark.storagelevel import StorageLevel
 from sparkgatha.graph.checkpoint import CheckpointManager
 from sparkgatha.graph.metrics import MetricsSink, state_fingerprint
 from sparkgatha.graph.pagerank import HOT_MIRROR_CAP
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 
 #: above this vertex count the label table stops being broadcastable and
@@ -88,13 +88,11 @@ def label_propagation(
     sink = metrics_sink or MetricsSink(checkpoint_dir, run_id)
     with no_aqe(edges.sparkSession):
         pre = edges.select("src", "dst", "weight")
-        vertices = (
+        vertices, n = materialize(
             pre.select(F.col("src").alias("vertex"))
             .unionByName(pre.select(F.col("dst").alias("vertex")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        n = vertices.count()
         if strategy == "auto":
             strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "shuffle"
         # broadcast mode: hash(dst) layout → the vote agg's combine is

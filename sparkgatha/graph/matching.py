@@ -39,7 +39,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import checkpoint_reset_stats, md5_long, no_aqe
+from sparkgatha.util import (
+    checkpoint_reset_stats,
+    materialize,
+    md5_long,
+    no_aqe,
+)
 
 
 def _edge_priority(u: Column, v: Column, rnd: int, seed: int) -> Column:
@@ -66,12 +71,11 @@ def maximal_matching(
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     spark = edges.sparkSession
     with no_aqe(spark):
-        e = checkpoint_reset_stats(canonical_undirected(edges))
-        matched = None
-        # r6: cached full count replaces the limit probe and sizes each
+        # r6: a full count replaces the limit probe and sizes each
         # round's exchanges to the shrinking candidate edge set (md5
         # priorities + min-struct aggs are partitioning-independent)
-        n_e = e.count()
+        e, n_e = materialize(canonical_undirected(edges), reset_stats=True)
+        matched = None
         if n_e == 0:
             # edge-free input: empty matching with the right schema
             return e.select(
@@ -120,11 +124,11 @@ def maximal_matching(
                     .unionByName(winners.select(F.col("v").alias("x")))
                     .distinct()
                 )
-                e = checkpoint_reset_stats(
+                e, n_e = materialize(
                     e.join(gone.withColumnRenamed("x", "u"), "u", "left_anti")
-                    .join(gone.withColumnRenamed("x", "v"), "v", "left_anti")
+                    .join(gone.withColumnRenamed("x", "v"), "v", "left_anti"),
+                    reset_stats=True,
                 )
-                n_e = e.count()
             if n_e == 0:
                 break
         return matched

@@ -31,7 +31,8 @@ Physical shape (the 100 TB story):
   * every per-round frame goes through ``checkpoint_reset_stats``: the
     round references the working set several times, and inherited
     sizeInBytes estimates compound across many-reference rounds
-    (util.py:60 — the k-truss discovery).
+    (util.py — the k-truss discovery); the counted ones go through
+    ``materialize``, which counts on the checkpoint's own job.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.cc import connected_components
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import checkpoint_reset_stats, no_aqe
+from sparkgatha.util import checkpoint_reset_stats, materialize, no_aqe
 
 
 def minimum_spanning_forest(edges: DataFrame) -> DataFrame:
@@ -68,13 +69,12 @@ def minimum_spanning_forest(edges: DataFrame) -> DataFrame:
                 "weight", "u", "v",
             )
         )
-        work = checkpoint_reset_stats(work)
-        # full count instead of a limit probe: it reads the cached
-        # checkpoint blocks, doubles as the emptiness test, and sizes
+        # full count instead of a limit probe: it rides on the
+        # checkpoint's job, doubles as the emptiness test, and sizes
         # this round's exchanges (r6 scale-adaptive shuffles — the
         # working set shrinks geometrically, so late rounds run on a
         # handful of partitions instead of the session default)
-        n_work = work.count()
+        work, n_work = materialize(work, reset_stats=True)
         if n_work == 0:
             # no non-self-loop edges at all
             return work.select("u", "v", "weight")
@@ -139,8 +139,7 @@ def minimum_spanning_forest(edges: DataFrame) -> DataFrame:
                     .agg(F.min(F.struct("weight", "u", "v")).alias("e"))
                     .select("cu", "cv", "e.weight", "e.u", "e.v")
                 )
-                work = checkpoint_reset_stats(work)
-                n_work = work.count()
+                work, n_work = materialize(work, reset_stats=True)
             if n_work == 0:
                 break
         return forest.select("u", "v", "weight")

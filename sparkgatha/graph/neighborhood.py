@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 
 def _prep(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -85,18 +85,21 @@ def hop_neighborhood_exact(edges: DataFrame, hops: int) -> DataFrame:
         )
 
 
-def _min_hop_pairs(edges: DataFrame, hops: int) -> tuple[DataFrame, DataFrame]:
-    """(seen(s, v, hop), verts(v)): exact all-sources BFS min-hop pairs
-    within ``hops`` forward hops — the machinery harmonic and closeness
-    centrality share.  The first time a (source, vertex) pair is reached
-    IS its min hop, so each layer is one join + one anti-join vs the
-    seen set — no per-pair min-agg needed.  Both returned frames are
-    materialized (localCheckpoint) before returning."""
+def _min_hop_pairs(
+    edges: DataFrame, hops: int
+) -> tuple[DataFrame, DataFrame, int]:
+    """(seen(s, v, hop), verts(v), vertex count): exact all-sources BFS
+    min-hop pairs within ``hops`` forward hops — the machinery harmonic
+    and closeness centrality share.  The first time a (source, vertex)
+    pair is reached IS its min hop, so each layer is one join + one
+    anti-join vs the seen set — no per-pair min-agg needed.  Both
+    returned frames are materialized (localCheckpoint) before
+    returning."""
     if hops < 1:
         raise ValueError(f"hops must be >= 1, got {hops}")
     e, verts = _prep(edges)
-    e = e.localCheckpoint(eager=True)
-    verts = verts.localCheckpoint(eager=True)
+    e, n_e = materialize(e)
+    verts, n_verts = materialize(verts)
     seen = verts.select(
         F.col("v").alias("s"), F.col("v"), F.lit(0).alias("hop")
     ).localCheckpoint(eager=True)
@@ -104,8 +107,7 @@ def _min_hop_pairs(edges: DataFrame, hops: int) -> tuple[DataFrame, DataFrame]:
     # r6: exchanges sized to the growing seen-pair set (exact integer
     # hops + anti-joins, partitioning-independent); the per-layer count
     # already exists as the emptiness test
-    n_seen = seen.count()
-    n_e = e.count()
+    n_seen = n_verts  # one (v, v, 0) row per vertex
     for r in fixpoint_rounds(edges.sparkSession, "min_hop_pairs", hops):
         with r.width(max(n_seen, n_e)):
             nxt = (
@@ -114,15 +116,14 @@ def _min_hop_pairs(edges: DataFrame, hops: int) -> tuple[DataFrame, DataFrame]:
                 .distinct()
                 .join(seen, ["s", "v"], "left_anti")
                 .select("s", "v", F.lit(r.n).alias("hop"))
-                .localCheckpoint(eager=False)
             )
-            n_nxt = nxt.count()
+            nxt, n_nxt = materialize(nxt)
             if n_nxt == 0:
                 break
             seen = seen.unionByName(nxt).localCheckpoint(eager=False)
             n_seen += n_nxt
             frontier = nxt
-    return seen, verts
+    return seen, verts, n_verts
 
 
 def harmonic_centrality(edges: DataFrame, hops: int) -> DataFrame:
@@ -136,7 +137,7 @@ def harmonic_centrality(edges: DataFrame, hops: int) -> DataFrame:
     """
     spark = edges.sparkSession
     with no_aqe(spark):
-        seen, verts = _min_hop_pairs(edges, hops)
+        seen, verts, _ = _min_hop_pairs(edges, hops)
         h = (
             seen.filter(F.col("hop") > 0)
             .groupBy("s")
@@ -168,8 +169,7 @@ def closeness_centrality(
     """
     spark = edges.sparkSession
     with no_aqe(spark):
-        seen, verts = _min_hop_pairs(edges, hops)
-        n = verts.count()
+        seen, verts, n = _min_hop_pairs(edges, hops)
         c = (
             seen.filter(F.col("hop") > 0)
             .groupBy("s")
@@ -263,7 +263,7 @@ def hop_plot(edges: DataFrame, hops: int) -> DataFrame:
     """
     spark = edges.sparkSession
     with no_aqe(spark):
-        seen, _ = _min_hop_pairs(edges, hops)
+        seen, _, _ = _min_hop_pairs(edges, hops)
         per = (
             seen.filter(F.col("hop") > 0)
             .groupBy("hop")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 #: frontier rows below which the relax join broadcasts the frontier
 #: (above it the join falls back to shuffle against the fixed layout)
@@ -44,9 +44,8 @@ def min_dist_from_seeds(
     the lazily checkpointed next state — one Spark job per superstep.
     """
     spark = edges.sparkSession
-    dist = seeds.select("vertex", "distance").localCheckpoint(eager=True)
+    dist, frontier_rows = materialize(seeds.select("vertex", "distance"))
     frontier = dist
-    frontier_rows = dist.count()
     with no_aqe(spark):
         layout = (
             edges.select("src", "dst", "weight")

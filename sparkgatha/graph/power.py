@@ -70,7 +70,7 @@ from typing import Callable, TypeVar
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from sparkgatha.graph.rounds import fixpoint_rounds
-from sparkgatha.util import no_aqe
+from sparkgatha.util import materialize, no_aqe
 
 S = TypeVar("S")
 
@@ -106,13 +106,13 @@ def _adjacency(edges: DataFrame, weighted: bool) -> DataFrame:
     return e.localCheckpoint(eager=True)
 
 
-def _vertices(e: DataFrame) -> DataFrame:
-    """The cached vertex universe: every endpoint of ``e``."""
-    return (
+def _vertices(e: DataFrame) -> tuple[DataFrame, int]:
+    """The cached vertex universe (every endpoint of ``e``) and its
+    size."""
+    return materialize(
         e.select(F.col("src").alias("vertex"))
         .unionByName(e.select(F.col("dst").alias("vertex")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -216,8 +216,7 @@ def hits(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        vertices = _vertices(e)
-        n = vertices.count()
+        vertices, n = _vertices(e)
         if n == 0:
             return _no_rounds(vertices, "hub", "authority")
 
@@ -286,8 +285,7 @@ def eigenvector_centrality(
     spark = edges.sparkSession
     with no_aqe(spark):
         e = _adjacency(edges, weighted)
-        vertices = _vertices(e)
-        n = vertices.count()
+        vertices, n = _vertices(e)
         if n == 0:
             return _no_rounds(vertices, "score")
         es = e.unionByName(
@@ -345,8 +343,8 @@ def katz_centrality(
     spark = edges.sparkSession
     with no_aqe(spark):
         e = _adjacency(edges, weighted)
-        vertices = _vertices(e)
-        if vertices.isEmpty():
+        vertices, n = _vertices(e)
+        if n == 0:
             return _no_rounds(vertices, "score")
 
         def step(x, _):

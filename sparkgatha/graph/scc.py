@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.rounds import fixpoint_rounds, width
-from sparkgatha.util import checkpoint_reset_stats, no_aqe
+from sparkgatha.util import checkpoint_reset_stats, materialize, no_aqe
 
 
 def strongly_connected_components(edges: DataFrame) -> DataFrame:
@@ -47,32 +47,27 @@ def strongly_connected_components(edges: DataFrame) -> DataFrame:
         # r6: one materialization of the lazy input — the edge distinct
         # and the vertex universe each consumed `edges`, re-running its
         # whole upstream plan; exchanges sized to the materialized rows
-        pre = edges.select("src", "dst").localCheckpoint(eager=True)
-        with width(spark, pre.count()):
-            e = (
-                pre.filter(F.col("src") != F.col("dst"))
-                .distinct()
-                .localCheckpoint(eager=True)
+        pre, n_pre = materialize(edges.select("src", "dst"))
+        with width(spark, n_pre):
+            e, n_e = materialize(
+                pre.filter(F.col("src") != F.col("dst")).distinct()
             )
             # vertex universe from the RAW endpoints, BEFORE the
             # self-loop filter: a vertex whose only edge is a self-loop
             # is a singleton SCC (networkx semantics), not an absent row
-            verts = (
+            verts, n_verts = materialize(
                 pre.select(F.col("src").alias("v"))
                 .unionByName(pre.select(F.col("dst").alias("v")))
                 .distinct()
-                .localCheckpoint(eager=True)
             )
-        n_e = e.count()
         assigned = None  # union of (vertex, scc_id) across rounds
-        # Job-count discipline: every per-iteration frame is a LAZY
-        # localCheckpoint whose materialization rides on the one FULL
-        # count() the loop already needs for its convergence test — one
-        # Spark job per superstep instead of two (the counts are full
-        # scans on purpose: a limit() probe would materialize only some
-        # partitions of the lazy checkpoint).
+        # Job-count discipline: a frame the loop counts is materialized
+        # by util.materialize, whose count rides on the checkpoint's own
+        # job; the color step's LAZY localCheckpoint materializes in the
+        # one full count of its changed rows — one Spark job per step
+        # instead of two.  The other per-iteration frames are lazy
+        # checkpoints that the next counted job materializes.
         for r in fixpoint_rounds(spark, "scc_peel"):
-            n_verts = verts.count()
             if n_verts == 0:
                 break
             # r6: size this peel round's exchanges to the surviving
@@ -119,9 +114,9 @@ def strongly_connected_components(edges: DataFrame) -> DataFrame:
                         .select("v", "c")
                         .join(members, ["v", "c"], "left_anti")
                         .distinct()
-                        .localCheckpoint(eager=False)
                     )
-                    if step.count() == 0:
+                    step, n_step = materialize(step)
+                    if n_step == 0:
                         break
                     members = members.unionByName(step).localCheckpoint(
                         eager=False
@@ -141,21 +136,17 @@ def strongly_connected_components(edges: DataFrame) -> DataFrame:
                     )
                 )
                 done = found.select(F.col("vertex").alias("v"))
-                verts = verts.join(done, "v", "left_anti").localCheckpoint(
-                    eager=False
+                verts, n_verts = materialize(
+                    verts.join(done, "v", "left_anti")
                 )
-                e = (
+                # the count sizes the next round's exchanges
+                e, n_e = materialize(
                     e.join(
                         done.withColumnRenamed("v", "src"), "src", "left_anti"
-                    )
-                    .join(
+                    ).join(
                         done.withColumnRenamed("v", "dst"), "dst", "left_anti"
                     )
-                    .localCheckpoint(eager=False)
                 )
-                # materialize + count: sizes the next round's exchanges
-                # (e only shrinks, so the count doubles as its action)
-                n_e = e.count()
         if assigned is None:
             return spark.createDataFrame([], "vertex long, scc_id long")
         return assigned
@@ -224,19 +215,12 @@ def condensation_layers(edges: DataFrame) -> DataFrame:
     spark = edges.sparkSession
     with no_aqe(spark):
         labels = strongly_connected_components(edges)
-        comps = (
-            labels.select(F.col("scc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        ce = _cross_component_edges(labels, edges).localCheckpoint(
-            eager=True
-        )
-        n_comps = comps.count()
+        comps, n_comps = materialize(labels.select(F.col("scc_id")).distinct())
+        ce, n_ce = materialize(_cross_component_edges(labels, edges))
         # r6: the relaxation runs on the condensation (≤ #components
         # rows, usually tiny) — size its exchanges accordingly; exact
         # integer max/plus arithmetic, partitioning-independent
-        n_rows = max(n_comps, ce.count())
+        n_rows = max(n_comps, n_ce)
         with width(spark, n_rows):
             state = comps.select("scc_id", F.lit(0).alias("layer"))
             state = checkpoint_reset_stats(state)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
+from sparkgatha.util import materialize
 
 
 def _degrees(und: DataFrame) -> DataFrame:
@@ -179,11 +180,10 @@ def triangle_estimate_doulion(
         1,
         2,
     )
-    samp = und.filter(coin < F.lit(thr)).localCheckpoint(eager=True)
     # bounded 1-row driver scalar baked as a literal (the bm25-N /
     # louvain-2m discipline) — a crossJoin scalar attach would put a
     # BroadcastNestedLoopJoin in the plan for no reason
-    n_samp = samp.count()
+    samp, n_samp = materialize(und.filter(coin < F.lit(thr)))
     o = _orient(samp, _degrees(samp))
     return (
         _triangles(o)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.rounds import fixpoint_rounds, width
 from sparkgatha.graph.triangles import _degrees, _orient, _triangles
-from sparkgatha.util import checkpoint_reset_stats, no_aqe
+from sparkgatha.util import checkpoint_reset_stats, materialize, no_aqe
 
 
 def _triangle_table(und: DataFrame) -> DataFrame:
@@ -103,18 +103,19 @@ def k_truss(
         # rounds chain on the previous round's table, and plain
         # checkpoints inherit compounding sizeInBytes estimates (see the
         # helper's docstring)
-        und = checkpoint_reset_stats(canonical_undirected(edges))
-        n_edges = und.count()
+        und, n_edges = materialize(
+            canonical_undirected(edges), reset_stats=True
+        )
         with width(spark, n_edges):
-            tris = checkpoint_reset_stats(_triangle_table(und))
-        n_tris = tris.count()
+            tris, n_tris = materialize(_triangle_table(und), reset_stats=True)
         keep = und  # k = 2 peels nothing: every edge is in the truss
         if need > 0:
             for r in fixpoint_rounds(spark, "k_truss", max_iter):
                 # one exchange row per (triangle, edge)
                 with r.width(3 * n_tris):
-                    nxt = checkpoint_reset_stats(_peel(tris, need))
-                    n_nxt = nxt.count()
+                    nxt, n_nxt = materialize(
+                        _peel(tris, need), reset_stats=True
+                    )
                 prev, tris = tris, nxt
                 if n_nxt == n_tris:
                     break

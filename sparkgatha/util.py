@@ -7,7 +7,7 @@ import threading
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def ws_tokens(text_col="text"):
@@ -103,6 +103,28 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
         jdf.rdd(), jdf.schema()
     )
     return DataFrame(jdf2, df.sparkSession)
+
+
+def materialize(
+    df: DataFrame, reset_stats: bool = False
+) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of ``df`` and its row count, from ONE job.
+
+    The count rides on the checkpoint's own job as an observed metric
+    (``DataFrame.observe``) instead of a second ``.count()`` job over
+    the checkpointed blocks.  The checkpointed frame is a fresh leaf,
+    so reading it later observes nothing.  ``reset_stats`` checkpoints
+    through :func:`checkpoint_reset_stats` (multi-reference round
+    plans).  Not for a frame that ends in ``limit``: under the observed
+    metric it is no longer a top-level limit and plans as an extra
+    job."""
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    if reset_stats:
+        out = checkpoint_reset_stats(observed)
+    else:
+        out = observed.localCheckpoint(eager=True)
+    return out, obs.get["rows"]
 
 
 #: target rows per exchange partition for EXACT-arithmetic iterative

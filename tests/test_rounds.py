@@ -1,9 +1,10 @@
-"""The exact-fixpoint round driver (graph/rounds.py) and the conf scopes
-it builds on (util.scoped_shuffle_partitions / util.no_aqe).
+"""The exact-fixpoint round driver (graph/rounds.py) and the helpers
+it builds on (util.scoped_shuffle_partitions / util.no_aqe, and
+util.materialize, which the loops count their state with).
 
 Every test here reads and sets session confs or local properties only;
-none launches a Spark job, except the CC golden, the Louvain labels
-and the empty-input cases at the bottom."""
+none launches a Spark job, except the CC golden, the Louvain labels,
+the empty-input cases and the materialize cases at the bottom."""
 
 import ast
 import pathlib
@@ -13,6 +14,8 @@ import time
 
 import networkx as nx
 import pytest
+
+from pyspark.sql import functions as F
 
 from graph_helpers import nx_graph, random_graph, to_spark_edges
 
@@ -30,7 +33,7 @@ from sparkgatha.graph.scc import (
     condensation_layers,
     strongly_connected_components,
 )
-from sparkgatha.util import no_aqe, scoped_shuffle_partitions
+from sparkgatha.util import materialize, no_aqe, scoped_shuffle_partitions
 
 _PARTITIONS = "spark.sql.shuffle.partitions"
 _AQE = "spark.sql.adaptive.enabled"
@@ -268,3 +271,38 @@ def test_migrated_operators_on_empty_edges(spark, op):
     edges = spark.createDataFrame([], "src long, dst long, weight double")
     got = [tuple(r) for df in _ON_EMPTY[op](edges) for r in df.collect()]
     assert got == ([(0, 0.0)] if op == "shortest_paths" else [])
+
+
+def _jobs_of(spark, group: str, action) -> int:
+    """Spark jobs launched by ``action()``, counted by a job group (the
+    status store keeps only the latest jobs of a long session)."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("reset_stats", [False, True])
+@pytest.mark.parametrize("rows", [0, 37])
+def test_materialize_counts_on_the_checkpoint_job(spark, rows, reset_stats):
+    """The observed count equals ``.count()``, costs no job beyond the
+    checkpoint's own, and the checkpointed frame carries no observation
+    (reading it again observes nothing)."""
+    # a distinct: an exchange, as in the loops' frames
+    df = spark.range(2 * rows).select((F.col("id") % 37).alias("k")).distinct()
+    tag = f"materialize-{rows}-{reset_stats}"
+    checkpoint_jobs = _jobs_of(
+        spark, f"{tag}-plain", lambda: df.localCheckpoint(eager=True)
+    )
+    got = []
+    jobs = _jobs_of(
+        spark, tag, lambda: got.extend(materialize(df, reset_stats=reset_stats))
+    )
+    out, n = got
+    assert jobs == checkpoint_jobs
+    assert n == rows == out.count() == df.count()
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "CollectMetrics" not in plan

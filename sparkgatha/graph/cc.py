@@ -30,7 +30,8 @@ Physical discipline (the G11 treatment PageRank gets):
   * one Spark action per round: the order-insensitive
     xxhash64/bit_xor fingerprint materializes the lazily
     local-checkpointed next edge set (lineage truncation) and detects
-    the fixpoint in the same job.
+    the fixpoint in the same job; its per-partition XORs are the
+    round's lineage, so a durable round adds no fingerprint job.
 
 A round is therefore 2 neighbor-list exchanges (one per star's join)
 plus the final distinct, with the min tables riding as tiny
@@ -40,14 +41,11 @@ shrinking parent-link set.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from sparkgatha.graph.canon import canonical_undirected
-from sparkgatha.graph.checkpoint import CheckpointManager
-from sparkgatha.graph.metrics import MetricsSink
-from sparkgatha.graph.rounds import fixpoint_rounds
+from sparkgatha.graph.metrics import Lineage, MetricsSink, lineage
+from sparkgatha.graph.rounds import DurableRounds
 from sparkgatha.util import materialize, no_aqe
 
 
@@ -100,16 +98,11 @@ def _small_star(e: DataFrame) -> DataFrame:
     return pairs.filter(F.col("u") != F.col("v")).distinct()
 
 
-def _fingerprint(e: DataFrame):
+def _fingerprint(e: DataFrame) -> Lineage:
     # multi-arg xxhash64 — no per-row string materialization (r6: the
     # concat_ws form allocated a UTF8String per edge per round; only the
     # equality of consecutive fingerprints matters, not the hash family)
-    row = (
-        e.select(F.xxhash64(F.col("u"), F.col("v")).alias("h"))
-        .agg(F.expr("bit_xor(h)").alias("x"), F.count("*").alias("n"))
-        .collect()[0]
-    )
-    return (row["x"], row["n"])
+    return lineage(e, F.xxhash64(F.col("u"), F.col("v")))
 
 
 def connected_components(
@@ -118,24 +111,24 @@ def connected_components(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
-    run_id: str = "cc",
     metrics_sink: MetricsSink | None = None,
 ) -> DataFrame:
     """(vertex long, component long) — component = min vertex id, exact.
 
     Isolated vertices never appear in an edge table; callers with a
     separate vertex set should left-join and coalesce(component, vertex).
-    With ``checkpoint_dir`` each round durably checkpoints the parent-link
-    edge set + manifest (G12); ``resume=True`` continues from the largest
-    complete round (the algorithm state IS the link set, so restarting on
-    it is exact).  Per-round link counts/fingerprints go to the S6 sink.
     ``max_iter`` follows the round and cap policy of graph/rounds.py:
     ``None`` runs to the fixpoint, an integer stops silently after that
-    round.
+    round.  ``checkpoint_dir``, ``checkpoint_every``, ``resume`` and
+    ``metrics_sink`` follow its durable-round policy: the state is the
+    parent-link edge set (so restarting on it is exact), and the round's
+    own fingerprint job is its lineage.
     """
     spark = edges.sparkSession
-    ckpt = CheckpointManager(checkpoint_dir, run_id)
-    sink = metrics_sink or MetricsSink(checkpoint_dir, run_id)
+    loop = DurableRounds(
+        spark, "connected_components", checkpoint_dir, checkpoint_every,
+        resume, metrics_sink,
+    )
     with no_aqe(spark):
         # r6: the vertex universe and the canonical edge set are
         # independent builds over the same input — overlap them (guide
@@ -150,31 +143,22 @@ def connected_components(
             )
 
         def _build_edges():
-            e0, start = None, 0
-            if resume and checkpoint_dir:
-                last = ckpt.latest_complete()
-                if last is not None:
-                    e0 = ckpt.load(spark, last)
-                    start = last
-            if e0 is None:
-                e0 = _canonical(edges).localCheckpoint(eager=True)
-            return e0, start
+            if loop.resumed is not None:
+                return loop.resumed
+            return _canonical(edges).localCheckpoint(eager=True)
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_v = pool.submit(_build_vertices)
             f_e = pool.submit(_build_edges)
             vertices, n = f_v.result()
-            e, start_it = f_e.result()
+            e = f_e.result()
         prev_fp = _fingerprint(e)
-        for r in fixpoint_rounds(
-            spark, "connected_components", max_iter, start=start_it
-        ):
-            t0 = time.monotonic()
+        for r in loop.rounds(max_iter):
             # r6 scale-adaptive exchanges: size this round's shuffles to
             # the CURRENT link count (the fingerprint already tallies
             # it) — labels are partitioning-independent exact integers,
             # so only wall changes
-            with r.width(prev_fp[1]):
+            with r.width(prev_fp.rows):
                 # r6: the large-star output feeds BOTH small-star
                 # branches (its min agg and its join), and the two
                 # copies optimize into non-canonically-equal subtrees
@@ -189,17 +173,10 @@ def connected_components(
                     _large_star(e).localCheckpoint(eager=True)
                 ).localCheckpoint(eager=False)
                 fp = _fingerprint(e)
-            wall = time.monotonic() - t0
-            converged = fp == prev_fp
-            durable = checkpoint_dir is not None and (
-                r.n % checkpoint_every == 0 or converged or r.last
-            )
-            sha = f"{(fp[0] or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{fp[1]}"
-            if durable:
-                e = ckpt.save(r.n, e, sha, metrics={"links": fp[1]})
-            sink.record(
-                r.n, float(abs(fp[1] - prev_fp[1])), fp[1], n, wall * 1000.0,
-                sha,
+            converged = fp.sha == prev_fp.sha
+            e = loop.commit(
+                r, e, done=converged, delta=float(abs(fp.rows - prev_fp.rows)),
+                active=fp.rows, rows=n, known=fp,
             )
             if converged:
                 break

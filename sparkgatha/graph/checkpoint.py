@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -92,8 +91,3 @@ class CheckpointManager:
 
     def load(self, spark: SparkSession, iteration: int) -> DataFrame:
         return spark.read.parquet(self._it_dir(iteration))
-
-    def clear(self) -> None:
-        if self.base_dir and os.path.isdir(self.base_dir):
-            shutil.rmtree(self.base_dir)
-            os.makedirs(self.base_dir, exist_ok=True)

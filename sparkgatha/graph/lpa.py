@@ -29,14 +29,12 @@ Physical discipline (the same G11/PageRank treatment):
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from sparkgatha.graph.checkpoint import CheckpointManager
-from sparkgatha.graph.metrics import MetricsSink, state_fingerprint
-from sparkgatha.graph.pagerank import HOT_MIRROR_CAP
+from sparkgatha.graph.metrics import MetricsSink
+from sparkgatha.graph.rounds import DurableRounds
+from sparkgatha.graph.skew import split_hot_srcs
 from sparkgatha.util import materialize, no_aqe
 
 
@@ -53,7 +51,6 @@ def label_propagation(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
-    run_id: str = "lpa",
     metrics_sink: MetricsSink | None = None,
     strategy: str = "auto",
     hot_threshold: int | None = None,
@@ -62,16 +59,18 @@ def label_propagation(
     """(vertex long, label long) over symmetrized ``edges(src,dst,weight)``.
 
     Pass both orientations (extract.symmetrize) for undirected graphs:
-    messages flow src → dst only.  With ``checkpoint_dir`` every
-    ``checkpoint_every``-th superstep writes a durable label checkpoint +
-    manifest (G12) and ``resume=True`` continues from the largest complete
-    one; convergence metrics (changed-vertex count per superstep) go to
-    the S6 sink either way.  ``strategy``: 'broadcast' (label table
-    broadcast each superstep — the ≤2x10^7-vertex regime) | 'shuffle'
-    (labels co-partitioned hash(vertex)=hash(src) into a shuffle join —
-    the beyond-broadcast regime; in that mode the layout partitions by
-    src so the vote join is exchange-free on the edge side) | 'auto'.
-    Both strategies are result-identical (tests).
+    messages flow src → dst only.  ``checkpoint_dir``,
+    ``checkpoint_every``, ``resume`` and ``metrics_sink`` follow the
+    durable-round policy of graph/rounds.py (the sink row's delta and
+    active count are the changed-vertex count; jobs labelled
+    ``label_propagation:<superstep>``).
+
+    ``strategy``: 'broadcast' (label table broadcast each superstep —
+    the ≤2x10^7-vertex regime) | 'shuffle' (labels co-partitioned
+    hash(vertex)=hash(src) into a shuffle join — the beyond-broadcast
+    regime; in that mode the layout partitions by src so the vote join
+    is exchange-free on the edge side) | 'auto'.  Both strategies are
+    result-identical (tests).
 
     ``check_every``: fuse this many supersteps into ONE Spark job (the
     pagerank fused-block discipline — interior steps end in a lazy
@@ -84,8 +83,10 @@ def label_propagation(
     tie-break).  Durable checkpoints keep their ``checkpoint_every``
     cadence: blocks are clamped so boundaries land on it.
     """
-    ckpt = CheckpointManager(checkpoint_dir, run_id)
-    sink = metrics_sink or MetricsSink(checkpoint_dir, run_id)
+    loop = DurableRounds(
+        edges.sparkSession, "label_propagation", checkpoint_dir,
+        checkpoint_every, resume, metrics_sink,
+    )
     with no_aqe(edges.sparkSession):
         pre = edges.select("src", "dst", "weight")
         vertices, n = materialize(
@@ -113,10 +114,8 @@ def label_propagation(
             )
             n_edges = layout.count()  # materialize the one-time layout
         else:
-            from sparkgatha.graph.skew import split_hot_srcs
-
             split = split_hot_srcs(
-                pre, num_partitions, hot_threshold, HOT_MIRROR_CAP,
+                pre, num_partitions, hot_threshold,
                 # `pre` is a FREE projection of `edges`; only cheap when
                 # the underlying table is cached — keep in sync if pre
                 # ever gains real work (filter/symmetrize/dedup)
@@ -128,13 +127,7 @@ def label_propagation(
                 hot_srcs_v = split.hot_srcs.select(
                     F.col("src").alias("vertex")
                 )
-        labels = None
-        start_it = 0
-        if resume and checkpoint_dir:
-            last = ckpt.latest_complete()
-            if last is not None:
-                labels = ckpt.load(edges.sparkSession, last)
-                start_it = last
+        labels = loop.resumed
         if labels is None:
             # eager on purpose: the start state feeds several consumers
             # inside the first fused block (state broadcast + update
@@ -196,34 +189,19 @@ def label_propagation(
                 ),
             )
 
-        it = start_it
-        while it < max_iter:
-            # fused block: `block` supersteps chained lazily, ONE driver
-            # action (the changed-count) at the end; each interior frame
-            # feeds two consumers (state broadcast/shuffle + self-join)
-            # and materializes once via the lazy localCheckpoint
-            block = min(max(check_every, 1), max_iter - it)
-            if checkpoint_dir is not None:
-                block = min(block, checkpoint_every - it % checkpoint_every)
-            block = max(block, 1)
-            t0 = time.monotonic()
+        for r in loop.rounds(max_iter, check_every=check_every):
+            # fused block: `r.steps` supersteps chained lazily, ONE
+            # driver action (the changed-count) at the end; each interior
+            # frame feeds two consumers (state broadcast/shuffle +
+            # self-join) and materializes once via the lazy localCheckpoint
             new_labels = labels
-            for _ in range(block):
+            for _ in range(r.steps):
                 new_labels = step(new_labels).localCheckpoint(eager=False)
-            it += block
             changed = new_labels.filter(F.col("_changed")).count()
-            wall = time.monotonic() - t0
-            durable = checkpoint_dir is not None and (
-                it % checkpoint_every == 0 or changed == 0 or it >= max_iter
+            labels = loop.commit(
+                r, new_labels.select("vertex", "label"), done=changed == 0,
+                delta=float(changed), active=changed, rows=n,
             )
-            if durable:
-                state = new_labels.select("vertex", "label")
-                sha = state_fingerprint(state)
-                labels = ckpt.save(it, state, sha, metrics={"changed": changed})
-            else:
-                sha = ""
-                labels = new_labels.select("vertex", "label")
-            sink.record(it, float(changed), changed, n, wall * 1000.0, sha)
             if changed == 0:
                 break
         layout.unpersist()

@@ -16,78 +16,70 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-METRICS_SCHEMA = (
-    "run_id string, iteration int, delta_l1 double, active_vertices long, "
-    "rows long, wall_ms double, lineage_sha string"
-)
+from pyspark.sql import Column, DataFrame, functions as F
 
 
-def state_fingerprint(state: DataFrame) -> str:
-    """Order/partitioning-insensitive sha of a state DataFrame.
+class Lineage(NamedTuple):
+    sha: str  # state_fingerprint's sha of the whole state
+    rows: int
+    partitions: list[dict]  # (partition_id, rows, sha) per partition
 
-    xxhash64 per row over all columns (doubles canonicalized to 12
+
+def _row_hash(state: DataFrame) -> Column:
+    """xxhash64 per row over all columns, doubles canonicalized to 12
     significant digits so fp noise below the correctness tolerance does
-    not change lineage), folded with bit_xor.
-    """
+    not change lineage."""
     cols = []
     for f in state.schema.fields:
         c = F.col(f.name)
         if f.dataType.simpleString() in ("double", "float"):
             c = F.format_number(c.cast("double"), 12)
         cols.append(c.cast("string"))
-    row = state.select(
-        F.xxhash64(F.concat_ws("\x1f", *cols)).alias("h")
-    )
-    agg = row.agg(
+    return F.xxhash64(F.concat_ws("\x1f", *cols))
+
+
+def state_fingerprint(state: DataFrame) -> str:
+    """Order/partitioning-insensitive sha of a state DataFrame: the row
+    hashes folded with bit_xor, and the row count."""
+    agg = state.select(_row_hash(state).alias("h")).agg(
         F.expr("bit_xor(h)").alias("x"), F.count("*").alias("n")
     ).collect()[0]
     return f"{agg['x'] or 0:016x}-{agg['n']}"
 
 
-def partition_fingerprints(state: DataFrame) -> list[dict]:
-    """Per-partition lineage: (partition_id, rows, sha)."""
-    cols = [F.col(f.name).cast("string") for f in state.schema.fields]
-    rows = (
-        state.select(
-            F.spark_partition_id().alias("pid"),
-            F.xxhash64(F.concat_ws("\x1f", *cols)).alias("h"),
-        )
+def lineage(state: DataFrame, row_hash: Column | None = None) -> Lineage:
+    """The state's sha and per-partition lineage from ONE job: the row
+    hashes fold with bit_xor per partition, and the partition XORs and
+    counts fold on the driver into the global sha.  XOR is associative,
+    so with the default ``row_hash`` the sha equals
+    :func:`state_fingerprint`'s at any partitioning."""
+    h = _row_hash(state) if row_hash is None else row_hash
+    per_partition = (
+        state.select(F.spark_partition_id().alias("pid"), h.alias("h"))
         .groupBy("pid")
-        .agg(F.expr("bit_xor(h)").alias("sha"), F.count("*").alias("rows"))
+        .agg(F.expr("bit_xor(h)").alias("x"), F.count("*").alias("n"))
         .collect()
     )
-    return [
-        {"partition_id": r["pid"], "rows": r["rows"], "sha": f"{r['sha']:016x}"}
-        for r in sorted(rows, key=lambda r: r["pid"])
-    ]
-
-
-def rank_delta(
-    new: DataFrame, old: DataFrame, key: str, value: str, eps: float = 1e-9
-) -> tuple[float, int]:
-    """(delta_l1, active_vertex_count) between two state DataFrames."""
-    j = new.alias("n").join(old.alias("o"), key, "full_outer")
-    d = F.abs(
-        F.coalesce(F.col(f"n.{value}"), F.lit(0.0))
-        - F.coalesce(F.col(f"o.{value}"), F.lit(0.0))
-    )
-    row = j.agg(
-        F.sum(d).alias("delta_l1"),
-        F.sum(F.when(d > eps, 1).otherwise(0)).alias("active"),
-    ).collect()[0]
-    return float(row["delta_l1"] or 0.0), int(row["active"] or 0)
+    x = n = 0
+    partitions = []
+    for r in sorted(per_partition, key=lambda r: r["pid"]):
+        x ^= r["x"]
+        n += r["n"]
+        partitions.append({
+            "partition_id": r["pid"],
+            "rows": r["n"],
+            "sha": f"{r['x'] & 0xFFFFFFFFFFFFFFFF:016x}",
+        })
+    return Lineage(f"{x:016x}-{n}", n, partitions)
 
 
 class MetricsSink:
-    """S6: append one row per superstep to a parquet `_metrics` table.
+    """S6: one row per superstep (per block when fused).
 
-    Local-friendly implementation: buffers rows on the driver and writes
-    JSON lines per iteration (atomic, append-only); `to_parquet` exports
-    the full table.  At cluster scale the same rows would go to an
-    Iceberg append — the schema is identical (METRICS_SCHEMA).
+    Buffers the rows on the driver (``rows``) and, with a ``base_dir``,
+    appends each as a JSON line to ``_metrics.jsonl``.
     """
 
     def __init__(self, base_dir: str | None, run_id: str):
@@ -121,20 +113,3 @@ class MetricsSink:
             with open(os.path.join(self.base_dir, "_metrics.jsonl"), "a") as f:
                 f.write(json.dumps(row) + "\n")
         return row
-
-    def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            [
-                (
-                    r["run_id"],
-                    r["iteration"],
-                    r["delta_l1"],
-                    r["active_vertices"],
-                    r["rows"],
-                    r["wall_ms"],
-                    r["lineage_sha"],
-                )
-                for r in self.rows
-            ],
-            METRICS_SCHEMA,
-        )

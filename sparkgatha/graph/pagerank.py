@@ -39,9 +39,10 @@ materializes the lazily local-checkpointed states as a side effect.
 ``check_every=k`` chains k supersteps into one block (interior dangling
 mass rides in-plan as a 1-row broadcast cross join), amortizing the
 per-superstep fixed cost (job launch, Py4J round trip, stats collect)
-k-fold with bit-identical numerics.  Checkpointing (G12) doubles as
-lineage truncation so the plan stays O(1) per superstep; resume
-continues from the largest complete iteration.
+k-fold with bit-identical numerics.  The supersteps run on the
+durable round loop of graph/rounds.py, which owns checkpoints (G12,
+doubling as lineage truncation so the plan stays O(1) per superstep),
+resume, block cadence and the per-superstep metrics row.
 
 AQE is scoped off inside the loop (sparkgatha/util.py:no_aqe — measured
 15-30x superstep regression with it on).
@@ -55,25 +56,20 @@ link-graph algorithms over the co-occurrence graph.
 from __future__ import annotations
 
 import logging
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from sparkgatha.graph.checkpoint import CheckpointManager
-from sparkgatha.graph.metrics import MetricsSink, partition_fingerprints, state_fingerprint
+from sparkgatha.graph.metrics import MetricsSink
+from sparkgatha.graph.rounds import DurableRounds
+from sparkgatha.graph.skew import HOT_MIRROR_CAP, split_hot_srcs
 from sparkgatha.util import no_aqe
 
 log = logging.getLogger(__name__)
 
 #: above this vertex count the rank vector stops being broadcastable
 BROADCAST_MAX_VERTICES = 20_000_000
-
-#: mirrored-hot-vertex cap per run (G10): vertices beyond it fall back to
-#: the straggler path — logged, never silent (each mirrored vertex costs
-#: (#hot x P) combine rows per superstep, so the cap bounds that exchange)
-HOT_MIRROR_CAP = 10_000
 
 
 @dataclass
@@ -255,8 +251,6 @@ def _prepare(edges: DataFrame, num_partitions: int, strategy: str,
     # broadcasts only the hot slice of the rank state into that branch
     # (step()), so hot edges never re-shuffle.  Exact: per-src sums are
     # unchanged, only the partition placement differs (L7 algebra).
-    from sparkgatha.graph.skew import split_hot_srcs
-
     w_out = W.partitionBy("src")
     norm_window = lambda df: df.select(  # noqa: E731
         "src", "dst", (F.col("weight") / F.sum("weight").over(w_out)).alias("w")
@@ -267,7 +261,7 @@ def _prepare(edges: DataFrame, num_partitions: int, strategy: str,
     )
     split = split_hot_srcs(
         edges.select("src", "dst", "weight"), num_partitions, hot_threshold,
-        HOT_MIRROR_CAP, map_cold=norm_window, map_hot=norm_bcast,
+        map_cold=norm_window, map_hot=norm_bcast,
         # the frame passed is a FREE projection of `edges`; its lineage
         # is only cheap when the underlying edge table is cached — keep
         # this flag in sync if the projection ever gains real work
@@ -337,9 +331,7 @@ def pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
-    run_id: str = "pagerank",
     metrics_sink: MetricsSink | None = None,
-    with_lineage: bool = False,
     strategy: str = "auto",
     hot_threshold: int | None = None,
     prepared: PreparedGraph | None = None,
@@ -351,8 +343,9 @@ def pagerank(
 
     For undirected graphs pass symmetrized edges (extract.symmetrize).
     Stops when delta_l1 < N * tol (NetworkX rule) or at max_iter.
-    ``checkpoint_dir`` enables durable per-superstep checkpoints and
-    resume; otherwise localCheckpoint truncates lineage only.
+    ``checkpoint_dir``, ``checkpoint_every``, ``resume`` and
+    ``metrics_sink`` follow the durable-round policy of graph/rounds.py
+    (jobs labelled ``pagerank:<superstep>``).
     ``strategy``: 'auto' | 'broadcast' | 'shuffle' (see module doc).
     ``prepared``: pass a :func:`prepare_pagerank` result to reuse the
     edge layout across calls (the caller then owns its unpersist).
@@ -368,7 +361,8 @@ def pagerank(
     ~1 s/superstep regardless of graph size) amortizes k-fold; numerics
     are unchanged (same float64 sums over the same partitions), the loop
     can only overshoot convergence by at most k-1 confirming supersteps.
-    Durable checkpoints force block boundaries at ``checkpoint_every``.
+    Durable checkpoints force block boundaries at ``checkpoint_every``,
+    and a block is labelled and numbered by its last superstep.
     ``personalization`` (vertex, weight): seed-biased teleport — the
     NetworkX semantics exactly (weights normalized to a distribution;
     vertices absent from it get 0; dangling mass redistributed by the
@@ -380,8 +374,10 @@ def pagerank(
     if prepared is None and edges is None:
         raise ValueError("pass edges or prepared")
     spark = (prepared.cold if prepared is not None else edges).sparkSession
-    ckpt = CheckpointManager(checkpoint_dir, run_id)
-    sink = metrics_sink or MetricsSink(checkpoint_dir, run_id)
+    loop = DurableRounds(
+        spark, "pagerank", checkpoint_dir, checkpoint_every, resume,
+        metrics_sink,
+    )
 
     owned = prepared is None
     if prepared is None:
@@ -389,9 +385,8 @@ def pagerank(
     try:
         with no_aqe(spark):
             return _pagerank_loop(
-                spark, prepared, alpha, tol, max_iter,
-                checkpoint_dir, checkpoint_every, resume, ckpt, sink,
-                with_lineage, init_ranks, check_every, personalization,
+                spark, prepared, loop, alpha, tol, max_iter,
+                init_ranks, check_every, personalization,
             )
     finally:
         if owned:
@@ -399,8 +394,7 @@ def pagerank(
 
 
 def _pagerank_loop(
-    spark, prepared, alpha, tol, max_iter,
-    checkpoint_dir, checkpoint_every, resume, ckpt, sink, with_lineage,
+    spark, prepared, loop, alpha, tol, max_iter,
     init_ranks=None, check_every=1, personalization=None,
 ) -> PageRankResult:
     vertices = prepared.vertices
@@ -452,15 +446,8 @@ def _pagerank_loop(
             return frame
         return frame.join(p_df, "vertex")
 
-    start_it = 0
     deltas: list[float] = []
-    walls: list[float] = []
-    ranks: DataFrame | None = None
-    if resume and checkpoint_dir:
-        last = ckpt.latest_complete()
-        if last is not None:
-            ranks = ckpt.load(spark, last)
-            start_it = last
+    ranks = loop.resumed
     if ranks is None and init_ranks is not None:
         prev = init_ranks.select("vertex", F.col("rank").alias("rank0"))
         seeded = vertices.join(prev, "vertex", "left").select(
@@ -551,20 +538,16 @@ def _pagerank_loop(
         return upd.select(*out_cols)
 
     converged = False
-    it = start_it
-    while it < max_iter and not converged:
-        # fused block: `block` supersteps chained lazily, ONE driver
+    it = loop.start
+    keep = ["vertex", "rank", "has_out"] + (["p"] if p_df is not None else [])
+    for r in loop.rounds(max_iter, check_every=check_every):
+        # fused block: `r.steps` supersteps chained lazily, ONE driver
         # action (the stats collect) at the end — interior steps compute
         # the dangling mass in-plan (1-row broadcast cross join over the
         # previous step's cached frame), so per-superstep fixed cost
         # (job launch, Py4J, stats round trip) amortizes across the block
-        block = min(check_every, max_iter - it)
-        if checkpoint_dir is not None:
-            block = min(block, checkpoint_every - it % checkpoint_every)
-        block = max(block, 1)
-        t0 = time.monotonic()
         frame = _with_p(ranks)
-        for j in range(block):
+        for j in range(r.steps):
             if j == 0:
                 # the block-leading dangle is a Python scalar from the
                 # previous stats collect (or the init scan)
@@ -589,7 +572,7 @@ def _pagerank_loop(
             # consumers (state broadcast, dangle agg, update join) and
             # materialize on first demand inside the block-end job
             frame = step(frame, base_col).localCheckpoint(eager=False)
-        it += block
+        it = r.n
 
         stats = (
             frame.agg(
@@ -603,39 +586,22 @@ def _pagerank_loop(
         )
         delta = float(stats["delta_l1"])
         dangle = float(stats["dangle"] or 0.0)
-        wall = time.monotonic() - t0
+        active = int(stats["active"])
         converged = delta < n * tol
-
-        durable = checkpoint_dir is not None and (
-            it % checkpoint_every == 0 or converged or it >= max_iter
-        )
-        if durable:
-            sha = state_fingerprint(frame.select("vertex", "rank"))
-            parts = partition_fingerprints(frame) if with_lineage else None
-            ranks = ckpt.save(
-                it,
-                frame.select("vertex", "rank", "has_out"),
-                sha,
-                metrics={"delta_l1": delta, "active": int(stats["active"])},
-                partitions=parts,
-            )
-        else:
-            sha = ""
-            keep = ["vertex", "rank", "has_out"] + (
-                ["p"] if p_df is not None else []
-            )
-            ranks = frame.select(*keep)
-
         deltas.append(delta)
-        walls.append(wall)
-        sink.record(it, delta, int(stats["active"]), n, wall * 1000.0, sha)
+        ranks = loop.commit(
+            r, frame.select(*keep), done=converged, delta=delta,
+            active=active, rows=n,
+        )
+        if converged:
+            break
 
     return PageRankResult(
         ranks.select("vertex", "rank"),
         it,
         converged,
         deltas,
-        walls,
+        loop.walls,
         n,
         n_edges,
         strategy,

@@ -44,9 +44,9 @@ def min_dist_from_seeds(
     the lazily checkpointed next state — one Spark job per superstep.
     """
     spark = edges.sparkSession
-    dist, frontier_rows = materialize(seeds.select("vertex", "distance"))
-    frontier = dist
     with no_aqe(spark):
+        dist, frontier_rows = materialize(seeds.select("vertex", "distance"))
+        frontier = dist
         layout = (
             edges.select("src", "dst", "weight")
             .repartition(num_partitions, "src")
@@ -107,14 +107,22 @@ def shortest_paths(
 ) -> DataFrame:
     """Single-source weighted distances (vertex long, distance double)
     over directed ``edges(src, dst, weight)``; unreachable vertices are
-    absent.  Non-negative weights assumed (as in the reference's use).
-    Exhausting ``max_iter`` returns the partial relaxation
-    (Bellman-Ford semantics); see ``min_dist_from_seeds`` for the
-    shared physical discipline.
+    absent, and a source that is no endpoint of any edge is not a
+    vertex of the graph, so it gives no rows at all.  Non-negative
+    weights assumed (as in the reference's use).  Exhausting
+    ``max_iter`` returns the partial relaxation (Bellman-Ford
+    semantics); see ``min_dist_from_seeds`` for the shared physical
+    discipline.
     """
-    spark = edges.sparkSession
-    seeds = spark.createDataFrame(
-        [(source, 0.0)], "vertex long, distance double"
+    # the seed is (source, 0.0) only if an edge touches the source; its
+    # build rides the seed's materialize job
+    seeds = (
+        edges.filter((F.col("src") == source) | (F.col("dst") == source))
+        .select(
+            F.lit(source).cast("long").alias("vertex"),
+            F.lit(0.0).alias("distance"),
+        )
+        .distinct()
     )
     dist, _ = min_dist_from_seeds(
         edges, seeds, max_iter=max_iter, num_partitions=num_partitions
@@ -266,7 +274,9 @@ def ego_hops(
 
     Unit-weight Bellman-Ford rounds ARE BFS layers: after k supersteps
     every reachable vertex within k hops carries its exact hop count and
-    nothing farther has been touched, so the bound needs no filter."""
+    nothing farther has been touched, so the bound needs no filter.  A
+    source that is no endpoint of any edge gives no rows, as in
+    :func:`shortest_paths`."""
     if hops < 1:
         raise ValueError(f"hops must be >= 1, got {hops}")
     unit = edges.select("src", "dst", F.lit(1.0).alias("weight"))

@@ -1,4 +1,4 @@
-"""One round driver for the exact-arithmetic fixpoint loops.
+"""One round driver for the iterative graph loops.
 
 Connected components, the k-core and k-truss peels, Luby MIS and
 coloring, maximal matching, the densest-subgraph peel and Borůvka MSF
@@ -27,8 +27,38 @@ point here):
   unrolled SQL replay.  ``Round.last`` marks its final round, so an
   operator can skip work that only a next round would read.  ``0`` runs
   no rounds.
-* ``start`` continues the numbering after a resumed checkpoint (CC);
-  both bounds count absolute round numbers.
+* ``start`` continues the numbering after a resumed checkpoint; both
+  bounds count absolute round numbers.
+* ``check_every=k`` fuses up to ``k`` supersteps into one round (a
+  block): the operator chains ``Round.steps`` supersteps lazily and
+  runs one action at the block's end.  A block never runs past
+  ``max_rounds`` and, when ``checkpoint_every`` is given, ends on every
+  multiple of it.  ``Round.n`` is the block's LAST superstep, so
+  numbering, bounds and labels stay in supersteps.
+
+Durable rounds (:class:`DurableRounds` — PageRank, label propagation
+and CC): one policy for checkpoints, resume and metrics.
+
+* ``checkpoint_dir=None`` keeps nothing: :meth:`DurableRounds.commit`
+  passes the state through, and the operator's lazy ``localCheckpoint``
+  truncates lineage.
+* With a ``checkpoint_dir``, a round commits durably when its number is
+  a multiple of ``checkpoint_every``, when it converged, or when it is
+  the last round of a fixed-round run.  A durable commit computes the
+  state's lineage — the order- and partitioning-insensitive sha and one
+  row per partition — in ONE fingerprint job (or takes the lineage the
+  operator already computed), then writes the state and its manifest
+  (``CheckpointManager.save``: lineage, per-partition rows, the round's
+  delta and active count) and continues from the re-read parquet.
+* ``resume=True`` loads the largest complete checkpoint, and the
+  rounds continue from its number; the operator starts from
+  ``DurableRounds.resumed`` instead of its initial state.
+* Every round — durable or not — appends one ``MetricsSink`` row:
+  round number, delta, active count, rows, wall (from the round's
+  start to its commit, before any checkpoint write) and lineage sha
+  (empty when nothing was fingerprinted).  The sink is the operator's
+  ``metrics_sink`` or a new one under ``checkpoint_dir``; checkpoints
+  and rows are tagged with the operator name.
 
 Width: the driver reads ``spark.sql.shuffle.partitions`` when a loop
 starts — not at import, because loops nest (MST runs CC inside its own
@@ -45,17 +75,21 @@ rounds raises; ``tol=0.0`` runs exactly ``max_iter`` fixed rounds.
 Louvain's level loop uses it for labels only.
 
 Job labels: every Spark job a round launches carries the description
-``<operator>:<round>``; the caller's description is restored when the
-loop ends by ``break``, exhaustion or an exception.
+``<operator>:<round>`` (a fused block: its last superstep); the
+caller's description is restored when the loop ends by ``break``,
+exhaustion or an exception.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import time
+from dataclasses import dataclass, field
 from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+from sparkgatha.graph.checkpoint import CheckpointManager
+from sparkgatha.graph.metrics import Lineage, MetricsSink, lineage
 from sparkgatha.util import (
     adaptive_shuffle_partitions,
     scoped_shuffle_partitions,
@@ -70,10 +104,12 @@ _DESCRIPTION_KEY = "spark.job.description"
 
 @dataclass(frozen=True)
 class Round:
-    n: int  # 1-based round number
+    n: int  # 1-based round number (a fused block: its last superstep)
     last: bool  # the final round of a fixed-round run
     spark: SparkSession
     session_width: int  # shuffle partitions when the loop started
+    steps: int = 1  # supersteps fused into this round
+    t0: float = field(default_factory=time.monotonic)
 
     def width(self, rows: int):
         """Scope this round's exchanges to ``rows`` rows of state."""
@@ -98,20 +134,96 @@ def fixpoint_rounds(
     *,
     cap: int = ROUND_CAP,
     start: int = 0,
+    check_every: int = 1,
+    checkpoint_every: int | None = None,
 ) -> Iterator[Round]:
-    """Yield rounds ``start + 1, start + 2, ...`` under the module's
-    round and cap policy; the caller breaks when it converges."""
+    """Yield rounds after ``start`` under the module's round, cap and
+    block policy; the caller breaks when it converges."""
     session_width = int(spark.conf.get(_WIDTH_KEY))
     bound = cap if max_rounds is None else max_rounds
     sc = spark.sparkContext
     caller = sc.getLocalProperty(_DESCRIPTION_KEY)
+    n = start
     try:
-        for n in range(start + 1, bound + 1):
+        while n < bound:
+            steps = min(max(check_every, 1), bound - n)
+            if checkpoint_every is not None:
+                steps = min(steps, checkpoint_every - n % checkpoint_every)
+            n += steps
             sc.setJobDescription(f"{op}:{n}")
-            yield Round(n, n == max_rounds, spark, session_width)
+            yield Round(n, n == max_rounds, spark, session_width, steps)
     finally:
         sc.setJobDescription(caller)
     if max_rounds is None:
         raise RuntimeError(
             f"{op} did not reach its fixpoint within {cap} rounds"
         )
+
+
+class DurableRounds:
+    """The durable-round policy of the module docstring for one
+    operator run: resume point, block cadence, commit and sink row."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        op: str,
+        checkpoint_dir: str | None = None,
+        checkpoint_every: int = 1,
+        resume: bool = False,
+        metrics_sink: MetricsSink | None = None,
+    ):
+        self.spark, self.op = spark, op
+        self.checkpoint_every = checkpoint_every
+        self._durable = checkpoint_dir is not None
+        self._ckpt = CheckpointManager(checkpoint_dir, op)
+        self._sink = metrics_sink or MetricsSink(checkpoint_dir, op)
+        self.walls: list[float] = []  # seconds per committed round
+        self.start = 0
+        self.resumed: DataFrame | None = None
+        last = self._ckpt.latest_complete() if resume else None
+        if last is not None:
+            self.resumed = self._ckpt.load(spark, last)
+            self.start = last
+
+    def rounds(
+        self, max_rounds: int | None, *, check_every: int = 1
+    ) -> Iterator[Round]:
+        """:func:`fixpoint_rounds` from the resumed round, with blocks
+        ending on the checkpoint cadence."""
+        return fixpoint_rounds(
+            self.spark, self.op, max_rounds, start=self.start,
+            check_every=check_every,
+            checkpoint_every=self.checkpoint_every if self._durable else None,
+        )
+
+    def commit(
+        self,
+        r: Round,
+        state: DataFrame,
+        *,
+        done: bool,
+        delta: float,
+        active: int,
+        rows: int,
+        known: Lineage | None = None,
+    ) -> DataFrame:
+        """End round ``r``: save ``state`` when the round is durable
+        (its lineage from ``known`` or from one fingerprint job) and
+        return the re-read frame, else return ``state``; then record
+        the round's sink row."""
+        wall = time.monotonic() - r.t0
+        sha = known.sha if known is not None else ""
+        if self._durable and (
+            r.n % self.checkpoint_every == 0 or done or r.last
+        ):
+            lin = known if known is not None else lineage(state)
+            sha = lin.sha
+            state = self._ckpt.save(
+                r.n, state, sha,
+                metrics={"delta_l1": delta, "active": active},
+                partitions=lin.partitions,
+            )
+        self.walls.append(wall)
+        self._sink.record(r.n, delta, active, rows, wall * 1000.0, sha)
+        return state

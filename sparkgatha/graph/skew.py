@@ -1,5 +1,5 @@
-"""G10/J9 — explicit skew handling: hot-vertex mirroring + salted joins
-(SURVEY.md §2.11 G10, §2.3 J9).
+"""G10 — hot-source mirroring for the shuffle-strategy layouts
+(SURVEY.md §2.11 G10).
 
 Reference analog: AGATHA's hub terms (ubiquitous lemmas / common code
 identifiers in the graft) are super-nodes; the reference controls them
@@ -9,23 +9,14 @@ that lever.  At 10^12-file scale cutoffs alone don't suffice, so the
 north rule adds *mechanical* mitigation: "degree-skew hot vertices are
 split via high-degree vertex mirroring before the shuffle".
 
-Two algebraically-exact tools (results identical with skew handling on
-or off — test layer L7):
-
- * ``salted_agg`` — two-level aggregation: rows of a hot key first
-   aggregate under (key, salt) across K partitions, then the K partials
-   combine.  Exact for any algebraic agg (sum/min/max/count).  Note
-   Spark's own map-side partial aggregation already bounds reduce skew
-   for these; salting matters when the *map-side hash table* degrades
-   or for high-cardinality composite aggs.
-
- * ``mirrored_join`` — broadcast the hot keys' build rows (they are few
-   keys × small payload), shuffle-join only the cold remainder, union.
-   The hot side never hits a shuffle partition at all — "mirroring": the
-   hub's state is replicated to every executor instead of gathering the
-   hub's edges onto one reducer.  AQE's skewJoin splits oversized
-   partitions too (enabled in session.py); this is the deterministic,
-   plan-visible variant.
+:func:`split_hot_srcs` is that mitigation for the shuffle strategies of
+PageRank and LPA, whose edges are laid out hash(src): a hot SOURCE
+vertex's edges are salted across all partitions by a row-content hash,
+the cold remainder stays hash(src), and each superstep joins the salted
+edges against a broadcast of just the hot sources' state rows.  The
+algebra is exact — per-src sums are unchanged, only the partition
+placement differs (results identical with skew handling on or off —
+test layer L7).
 """
 
 from __future__ import annotations
@@ -37,6 +28,11 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 log = logging.getLogger(__name__)
+
+#: mirrored-hot-vertex cap per run (G10): vertices beyond it fall back to
+#: the straggler path — logged, never silent (each mirrored vertex costs
+#: (#hot x P) combine rows per superstep, so the cap bounds that exchange)
+HOT_MIRROR_CAP = 10_000
 
 
 @dataclass
@@ -56,7 +52,6 @@ def split_hot_srcs(
     pre: DataFrame,
     num_partitions: int,
     hot_threshold: int | None = None,
-    hot_mirror_cap: int = 10_000,
     map_cold=None,
     map_hot=None,
     persist_input: bool | None = None,
@@ -66,7 +61,7 @@ def split_hot_srcs(
     handling, and salt formula in sync).
 
     Detects hot SOURCE vertices (out-degree > threshold, default
-    edges/partitions/4 with a 16384 floor, capped at ``hot_mirror_cap``
+    edges/partitions/4 with a 16384 floor, capped at :data:`HOT_MIRROR_CAP`
     with a logged warning), salts their edges across all partitions via
     ``pmod(xxhash64(src,dst,weight), P)``, hash(src)-partitions the cold
     remainder, and persists+materializes both layouts.
@@ -105,17 +100,17 @@ def split_hot_srcs(
         .filter(F.col("outd") > hot_threshold)
         .orderBy(F.col("outd").desc())
         .select("src", "out_w")
-        .limit(hot_mirror_cap + 1)
+        .limit(HOT_MIRROR_CAP + 1)
         .collect()
     )
-    if len(hot_rows) > hot_mirror_cap:
-        hot_rows = hot_rows[:hot_mirror_cap]
+    if len(hot_rows) > HOT_MIRROR_CAP:
+        hot_rows = hot_rows[:HOT_MIRROR_CAP]
         log.warning(
             "G10/shuffle: more than %d srcs exceed the hot threshold %d; "
             "salting only the %d highest-out-degree ones — the rest take "
             "the plain hash(src) path (raise hot_threshold or the cap if "
             "stragglers appear)",
-            hot_mirror_cap, hot_threshold, hot_mirror_cap,
+            HOT_MIRROR_CAP, hot_threshold, HOT_MIRROR_CAP,
         )
     ident = lambda df: df  # noqa: E731
     map_cold = map_cold or ident
@@ -143,95 +138,3 @@ def split_hot_srcs(
     if owned:
         pre.unpersist()
     return HotSrcSplit(cold, hot, hot_srcs, hot_w, n_edges, hot_threshold)
-
-
-def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Keys whose row count exceeds ``threshold`` (the mirror set)."""
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("_cnt"))
-        .filter(F.col("_cnt") > threshold)
-        .select(key)
-    )
-
-
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    agg: str = "sum",
-    num_salts: int = 16,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """Two-level exact aggregation: groupBy(key, salt) → groupBy(key).
-
-    ``agg`` ∈ {sum, min, max, count} (algebraic decompositions).
-    If ``hot`` is given, only those keys are salted; cold keys take the
-    one-level path and the two unions back together.
-    """
-    fns = {
-        "sum": (F.sum, F.sum),
-        "min": (F.min, F.min),
-        "max": (F.max, F.max),
-        "count": (F.count, F.sum),
-    }
-    partial_fn, final_fn = fns[agg]
-
-    def two_level(d: DataFrame) -> DataFrame:
-        # salt from ROW CONTENT, not monotonically_increasing_id():
-        # the generated id is nondeterministic under task/stage retry,
-        # and a recomputed partition re-salting rows differently while
-        # sibling reduce outputs are reused can double-count or drop
-        # partial sums.  Content-hash salting is retry-stable; rows
-        # identical in every column share a salt (acceptable: real
-        # gather rows carry distinct payloads, and exactness beats a
-        # marginally better spread)
-        salted = d.withColumn(
-            "_salt",
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in d.columns]),
-                F.lit(num_salts),
-            ),
-        )
-        partial = salted.groupBy(key, "_salt").agg(
-            partial_fn(value).alias("_p")
-        )
-        return partial.groupBy(key).agg(final_fn("_p").alias(value))
-
-    if hot is None:
-        return two_level(df)
-    hot_b = F.broadcast(hot)
-    hot_rows = df.join(hot_b, key, "left_semi")
-    cold_rows = df.join(hot_b, key, "left_anti")
-    one_level = cold_rows.groupBy(key).agg(partial_fn(value).alias(value))
-    return two_level(hot_rows).unionByName(one_level)
-
-
-def mirrored_join(
-    big: DataFrame,
-    state: DataFrame,
-    big_key: str,
-    state_key: str,
-    threshold: int = 100_000,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """Equi-join ``big ⋈ state`` with hub keys replicated (broadcast)
-    instead of shuffled — exact same rows as a plain inner join.
-
-    ``hot`` overrides detection (pass the precomputed mirror set at
-    superstep time so detection isn't re-run per iteration).
-    """
-    if hot is None:
-        hot = hot_keys(big, big_key, threshold)
-    hot = hot.select(F.col(big_key).alias("_hk"))
-    hot_b = F.broadcast(hot)
-
-    big_hot = big.join(hot_b, big[big_key] == F.col("_hk"), "left_semi")
-    big_cold = big.join(hot_b, big[big_key] == F.col("_hk"), "left_anti")
-    state_hot = state.join(hot_b, state[state_key] == F.col("_hk"), "left_semi")
-
-    joined_hot = big_hot.join(
-        F.broadcast(state_hot), big_hot[big_key] == state_hot[state_key]
-    )
-    joined_cold = big_cold.join(state, big_cold[big_key] == state[state_key])
-    return joined_hot.unionByName(joined_cold)

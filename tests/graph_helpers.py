@@ -61,6 +61,19 @@ def nx_graph(triples):
     return g
 
 
+def assert_no_edge_exchange(plan: str) -> bool:
+    """True iff the physical plan reads the persisted edge layout with NO
+    shuffle Exchange above it: the plan must contain an
+    InMemoryTableScan, and the plan text ABOVE the InMemoryRelation
+    subtree must contain no ``Exchange hashpartitioning`` (the one-time
+    layout Exchange lives INSIDE the InMemoryRelation and is expected;
+    BroadcastExchange for the small state side is allowed)."""
+    if "InMemoryTableScan" not in plan:
+        return False
+    above_cache = plan.split("InMemoryRelation", 1)[0]
+    return "Exchange hashpartitioning" not in above_cache
+
+
 def pagerank_oracle(directed_edges, alpha=0.85, tol=1e-12, max_iter=500,
                     personalization=None):
     """Pure-Python PageRank power iteration — the exact algorithm of

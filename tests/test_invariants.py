@@ -4,7 +4,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from graph_helpers import random_graph, to_spark_edges
+from graph_helpers import assert_no_edge_exchange, random_graph, to_spark_edges
 
 from sparkgatha.graph.pagerank import pagerank
 from sparkgatha.io import read_table
@@ -72,8 +72,6 @@ def test_edge_exchange_reused_across_superstep(spark):
     # partition-local agg: no shuffle Exchange ABOVE the cached edge scan
     # (the InMemoryRelation subtree retains its one-time layout Exchange;
     # BroadcastExchange for the rank vector is expected and allowed)
-    from sparkgatha.graph.partitioning import assert_no_edge_exchange
-
     assert assert_no_edge_exchange(plan), plan[:2000]
 
 

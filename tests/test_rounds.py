@@ -3,8 +3,9 @@ it builds on (util.scoped_shuffle_partitions / util.no_aqe, and
 util.materialize, which the loops count their state with).
 
 Every test here reads and sets session confs or local properties only;
-none launches a Spark job, except the CC golden, the Louvain labels,
-the empty-input cases and the materialize cases at the bottom."""
+none launches a Spark job, except the PageRank/LPA labels, the CC
+golden, the Louvain labels, the empty-input and absent-source cases and
+the materialize cases at the bottom."""
 
 import ast
 import pathlib
@@ -145,6 +146,7 @@ def test_conf_scopes_from_two_threads_restore_the_originals(spark):
 _MIGRATED = (
     "cc", "kcore", "truss", "mis", "matching", "densest", "mst",
     "scc", "betweenness", "neighborhood", "paths", "bipartite", "power",
+    "pagerank", "lpa",
 )
 _BANNED = {"scoped_shuffle_partitions", "adaptive_shuffle_partitions"}
 _CAP_NAME = re.compile(r"CAP|RAIL|ROUND", re.IGNORECASE)
@@ -195,6 +197,82 @@ def test_only_the_round_driver_scopes_shuffle_width():
         if path not in owners and (uses := _width_uses(path))
     }
     assert not found
+
+
+_DURABLE_CALLS = {"CheckpointManager", "latest_complete", "record"}
+
+
+def test_only_the_round_driver_checkpoints_resumes_and_records():
+    """Source scan, no Spark: the durable-round policy (checkpoint
+    manager, resume point, sink row) lives in graph/rounds.py only."""
+    found = []
+    for path in sorted(_PACKAGE.rglob("*.py")):
+        if path == _PACKAGE / "graph" / "rounds.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                f, "id", None
+            )
+            if name in _DURABLE_CALLS:
+                found.append(f"{path.relative_to(_PACKAGE)}:{node.lineno}")
+    assert not found
+
+
+def test_fixed_rounds_fuse_blocks_on_the_checkpoint_cadence(spark):
+    got = [
+        (r.n, r.steps, r.last)
+        for r in fixpoint_rounds(
+            spark, "fused", 9, start=1, check_every=4, checkpoint_every=3
+        )
+    ]
+    assert got == [(3, 2, False), (6, 3, False), (9, 3, True)]
+    assert [r.n for r in fixpoint_rounds(spark, "fused", 5, check_every=2)] == [
+        2, 4, 5
+    ]
+
+
+def _job_labels(spark, group: str, action) -> list:
+    """The descriptions of the Spark jobs ``action()`` launched, found
+    by job group in the status store (None for an unlabelled job)."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    labels = []
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        d = jsc.statusStore().job(job).description()
+        labels.append(d.get() if d.isDefined() else None)
+    return labels
+
+
+def test_pagerank_and_lpa_jobs_carry_their_superstep_labels(spark):
+    """A fused block's jobs carry the number of its last superstep."""
+    from sparkgatha.graph.lpa import label_propagation
+    from sparkgatha.graph.pagerank import pagerank
+
+    path = [(i, i + 1, 1.0) for i in range(12)]
+    edges = to_spark_edges(spark, path, symmetric=True)
+    pr = _job_labels(
+        spark, "pagerank-labels",
+        lambda: pagerank(edges, tol=0.0, max_iter=5, check_every=2),
+    )
+    assert {x for x in pr if x} == {"pagerank:2", "pagerank:4", "pagerank:5"}
+    lpa = _job_labels(
+        spark, "lpa-labels",
+        lambda: label_propagation(
+            edges, max_iter=5, num_partitions=4, check_every=2
+        ).collect(),
+    )
+    assert {x for x in lpa if x} == {
+        f"label_propagation:{n}" for n in (2, 4, 5)
+    }
 
 
 def test_cc_fixpoint_mode_matches_networkx(spark):
@@ -267,10 +345,25 @@ _ON_EMPTY = {
 @pytest.mark.parametrize("op", sorted(_ON_EMPTY))
 def test_migrated_operators_on_empty_edges(spark, op):
     """The zero-round and first-round-break paths: an empty edge frame
-    gives an empty result (shortest paths: the source alone)."""
+    gives an empty result."""
     edges = spark.createDataFrame([], "src long, dst long, weight double")
     got = [tuple(r) for df in _ON_EMPTY[op](edges) for r in df.collect()]
-    assert got == ([(0, 0.0)] if op == "shortest_paths" else [])
+    assert got == []
+
+
+def test_shortest_paths_from_a_source_outside_the_graph(spark):
+    """A source that no edge touches is no vertex: no distances, no
+    ego network.  A source that is only a destination is a vertex."""
+    from sparkgatha.graph.paths import ego_hops
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 2.0)], "src long, dst long, weight double"
+    )
+    assert shortest_paths(edges, 7).collect() == []
+    assert ego_hops(edges, 7, hops=2).collect() == []
+    assert [tuple(r) for r in shortest_paths(edges, 3).collect()] == [
+        (3, 0.0)
+    ]
 
 
 def _jobs_of(spark, group: str, action) -> int:

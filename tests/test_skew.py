@@ -1,13 +1,11 @@
 """L7 — skew handling: hot-vertex mirroring changes the physical layout,
-never the result; salted aggregation is algebraically exact
-(SURVEY.md §5.2 L7)."""
+never the result (SURVEY.md §5.2 L7)."""
 
 from pyspark.sql import functions as F
 
 from graph_helpers import pagerank_oracle, powerlaw_graph, to_spark_edges, undirected_both
 
 from sparkgatha.graph.pagerank import pagerank
-from sparkgatha.graph.skew import hot_keys, mirrored_join, salted_agg
 from sparkgatha.synthetic import powerlaw_edges
 
 
@@ -30,46 +28,6 @@ def test_pagerank_hot_mirroring_exact(spark):
         got = {x["vertex"]: x["rank"] for x in r.ranks.collect()}
         for k in want:
             assert abs(got[k] - want[k]) < 1e-12, pr_kwargs
-
-
-def test_synthetic_hub_is_mirrored(spark):
-    """The bench generator's hub vertex must trip the hot detector."""
-    e = powerlaw_edges(spark, 200_000, n_vertices=20_000, num_partitions=8)
-    hot = hot_keys(e, "dst", threshold=200_000 // 8 // 2)
-    assert hot.count() >= 1
-
-
-def test_salted_agg_exact(spark):
-    e = powerlaw_edges(spark, 100_000, n_vertices=5_000, num_partitions=8)
-    plain = e.groupBy("dst").agg(F.sum("weight").alias("weight"))
-    hot = hot_keys(e, "dst", threshold=1000)
-    salted = salted_agg(e, "dst", "weight", agg="sum", num_salts=8, hot=hot)
-    diff = (
-        plain.withColumnRenamed("weight", "a")
-        .join(salted.withColumnRenamed("weight", "b"), "dst", "full_outer")
-        .filter(
-            F.col("a").isNull()
-            | F.col("b").isNull()
-            | (F.abs(F.col("a") - F.col("b")) > 1e-9)
-        )
-        .count()
-    )
-    assert diff == 0
-
-
-def test_mirrored_join_exact(spark):
-    e = powerlaw_edges(spark, 100_000, n_vertices=5_000, num_partitions=8)
-    state = (
-        e.select(F.col("src").alias("vertex")).distinct()
-        .withColumn("val", F.col("vertex") * 2)
-    )
-    plain = e.join(state, e.src == state.vertex).select("src", "dst", "val")
-    mirrored = mirrored_join(e, state, "src", "vertex", threshold=1000).select(
-        "src", "dst", "val"
-    )
-    assert plain.count() == mirrored.count()
-    assert plain.exceptAll(mirrored).count() == 0
-    assert mirrored.exceptAll(plain).count() == 0
 
 
 def test_no_straggler_partition_after_mirroring(spark):

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, functions as F
 from sparkgatha.graph.canon import canonical_undirected
 from sparkgatha.graph.metrics import Lineage, MetricsSink, lineage
 from sparkgatha.graph.rounds import DurableRounds
-from sparkgatha.util import materialize, no_aqe
+from sparkgatha.util import concurrently, materialize, no_aqe
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -133,8 +133,6 @@ def connected_components(
         # r6: the vertex universe and the canonical edge set are
         # independent builds over the same input — overlap them (guide
         # §2.6); contents are identical either way
-        from concurrent.futures import ThreadPoolExecutor
-
         def _build_vertices():
             return materialize(
                 edges.select(F.col("src").alias("vertex"))
@@ -147,11 +145,7 @@ def connected_components(
                 return loop.resumed
             return _canonical(edges).localCheckpoint(eager=True)
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_v = pool.submit(_build_vertices)
-            f_e = pool.submit(_build_edges)
-            vertices, n = f_v.result()
-            e = f_e.result()
+        (vertices, n), e = concurrently(spark, _build_vertices, _build_edges)
         prev_fp = _fingerprint(e)
         for r in loop.rounds(max_iter):
             # r6 scale-adaptive exchanges: size this round's shuffles to

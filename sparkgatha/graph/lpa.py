@@ -21,6 +21,9 @@ Physical discipline (the same G11/PageRank treatment):
     BroadcastHashJoin, so the vote aggregation's map-side combine runs
     against stationary edges and the exchanges carry only the
     (dst, label) partials and the |V|-row best-label table;
+  * beyond a broadcastable label table, the ``shuffle`` strategy lays
+    edges out by src instead and salts hot srcs (G10, policy and
+    strategy rule in graph/skew.py);
   * the mode-agg tie-break is max(struct(wsum, -label)) — an ordinary
     hash aggregation, not a row_number window (no per-dst sort);
   * one Spark action per superstep: the changed-vertex count
@@ -33,15 +36,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from sparkgatha.graph.metrics import MetricsSink
-from sparkgatha.graph.rounds import DurableRounds
-from sparkgatha.graph.skew import split_hot_srcs
+from sparkgatha.graph.rounds import DurableRounds, job_description
+from sparkgatha.graph.skew import hot_keys, resolve_strategy, salted_layout
 from sparkgatha.util import materialize, no_aqe
-
-
-#: above this vertex count the label table stops being broadcastable and
-#: the superstep falls back to a co-partitioned shuffle join (same rule
-#: as pagerank.BROADCAST_MAX_VERTICES)
-BROADCAST_MAX_VERTICES = 20_000_000
 
 
 def label_propagation(
@@ -53,7 +50,6 @@ def label_propagation(
     resume: bool = False,
     metrics_sink: MetricsSink | None = None,
     strategy: str = "auto",
-    hot_threshold: int | None = None,
     check_every: int = 1,
 ) -> DataFrame:
     """(vertex long, label long) over symmetrized ``edges(src,dst,weight)``.
@@ -63,14 +59,16 @@ def label_propagation(
     ``checkpoint_every``, ``resume`` and ``metrics_sink`` follow the
     durable-round policy of graph/rounds.py (the sink row's delta and
     active count are the changed-vertex count; jobs labelled
-    ``label_propagation:<superstep>``).
+    ``label_propagation:<superstep>``, and the entry build's
+    ``label_propagation:prepare``).
 
     ``strategy``: 'broadcast' (label table broadcast each superstep —
     the ≤2x10^7-vertex regime) | 'shuffle' (labels co-partitioned
     hash(vertex)=hash(src) into a shuffle join — the beyond-broadcast
     regime; in that mode the layout partitions by src so the vote join
-    is exchange-free on the edge side) | 'auto'.  Both strategies are
-    result-identical (tests).
+    is exchange-free on the edge side, and hot srcs are salted as
+    graph/skew.py states) | 'auto' (the graph/skew.py rule).  Both
+    strategies are result-identical (tests).
 
     ``check_every``: fuse this many supersteps into ONE Spark job (the
     pagerank fused-block discipline — interior steps end in a lazy
@@ -83,28 +81,25 @@ def label_propagation(
     tie-break).  Durable checkpoints keep their ``checkpoint_every``
     cadence: blocks are clamped so boundaries land on it.
     """
+    spark = edges.sparkSession
     loop = DurableRounds(
-        edges.sparkSession, "label_propagation", checkpoint_dir,
+        spark, "label_propagation", checkpoint_dir,
         checkpoint_every, resume, metrics_sink,
     )
-    with no_aqe(edges.sparkSession):
+    # the jobs before the first round carry the entry build's label
+    with no_aqe(spark), job_description(spark, "label_propagation:prepare"):
         pre = edges.select("src", "dst", "weight")
         vertices, n = materialize(
             pre.select(F.col("src").alias("vertex"))
             .unionByName(pre.select(F.col("dst").alias("vertex")))
             .distinct()
         )
-        if strategy == "auto":
-            strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "shuffle"
+        strategy = resolve_strategy(strategy, n)
         # broadcast mode: hash(dst) layout → the vote agg's combine is
         # partition-local; shuffle mode: hash(src) layout → the label
         # join is exchange-free on the edge side and only the |V|-row
-        # label table shuffles per superstep.  In shuffle mode a hot
-        # SOURCE vertex would park its whole out-edge list in one
-        # partition (the G10 straggler, src side) — its edges are salted
-        # across all partitions and each superstep joins them against a
-        # broadcast of just the (≤HOT_MIRROR_CAP) hot-src label rows, so
-        # they never re-shuffle.  Exact: the vote agg groups by
+        # label table shuffles per superstep, with hot srcs salted
+        # (graph/skew.py).  Exact: the vote agg groups by
         # (dst, label) AFTER the union, identical algebra either way.
         hot_layout = None
         hot_srcs_v = None
@@ -112,21 +107,21 @@ def label_propagation(
             layout = pre.repartition(num_partitions, "dst").persist(
                 StorageLevel.MEMORY_AND_DISK
             )
-            n_edges = layout.count()  # materialize the one-time layout
+            layout.count()  # materialize the one-time layout
         else:
-            split = split_hot_srcs(
-                pre, num_partitions, hot_threshold,
-                # `pre` is a FREE projection of `edges`; only cheap when
-                # the underlying table is cached — keep in sync if pre
-                # ever gains real work (filter/symmetrize/dedup)
-                persist_input=edges.storageLevel == StorageLevel.NONE,
-            )
+            # own a raw-lineage input the way prepare_pagerank does:
+            # persisted for the count, detection and layout scans,
+            # released once the layouts are cached
+            owned = edges.storageLevel == StorageLevel.NONE
+            if owned:
+                pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
+            hot = hot_keys(pre, "src", num_partitions, pre.count())
+            split = salted_layout(pre, "src", num_partitions, hot)
+            if owned:
+                pre.unpersist()
             layout, hot_layout = split.cold, split.hot
-            n_edges = split.n_edges
-            if split.hot_srcs is not None:
-                hot_srcs_v = split.hot_srcs.select(
-                    F.col("src").alias("vertex")
-                )
+            if hot is not None:
+                hot_srcs_v = hot.select(F.col("src").alias("vertex"))
         labels = loop.resumed
         if labels is None:
             # eager on purpose: the start state feeds several consumers

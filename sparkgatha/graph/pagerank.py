@@ -13,7 +13,8 @@ Two physical strategies, one semantics (chosen by ``strategy``):
 ``broadcast`` (default while the rank vector fits executor memory —
   the 10^6–10^7-vertex regime):
     * edges are hash-partitioned by **dst** once (G11 layout) and
-      never move again;
+      never move again; hot dst vertices are mirrored across all
+      partitions (G10, policy in graph/skew.py);
     * each superstep broadcasts the rank vector into a
       BroadcastHashJoin, and the groupBy(dst) aggregation is
       **partition-local** (child partitioning already hash(dst)) —
@@ -27,11 +28,9 @@ Two physical strategies, one semantics (chosen by ``strategy``):
       IS the layout);
     * per superstep only the small rank state shuffles into a
       sort-merge join; contributions shuffle once into groupBy(dst);
-    * hot SOURCE vertices (out-degree > threshold, the G10 straggler
-      transposed to the src side) are salted across all partitions at
-      layout time and normalized/joined via broadcasts of their
-      ≤HOT_MIRROR_CAP-row out-weight and rank slices — the salted
-      edges never re-shuffle, and the algebra is exact (L7 tests).
+    * hot src vertices are salted across all partitions (G10, policy
+      in graph/skew.py) and normalized/joined via broadcasts of their
+      out-weight and rank slices — the salted edges never re-shuffle.
 
 Superstep actions: exactly ONE Spark job per fused block — the stats
 collect returns (delta_l1, active count, next danglesum) together and
@@ -55,21 +54,15 @@ link-graph algorithms over the co-occurrence graph.
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from sparkgatha.graph.metrics import MetricsSink
-from sparkgatha.graph.rounds import DurableRounds
-from sparkgatha.graph.skew import HOT_MIRROR_CAP, split_hot_srcs
-from sparkgatha.util import no_aqe
-
-log = logging.getLogger(__name__)
-
-#: above this vertex count the rank vector stops being broadcastable
-BROADCAST_MAX_VERTICES = 20_000_000
+from sparkgatha.graph.rounds import DurableRounds, job_description
+from sparkgatha.graph.skew import hot_keys, resolve_strategy, salted_layout
+from sparkgatha.util import concurrently, no_aqe
 
 
 @dataclass
@@ -106,7 +99,7 @@ class PreparedGraph:
     strategy: str
     num_partitions: int
     hot_srcs: DataFrame | None = None     # shuffle mode: ≤HOT_MIRROR_CAP-row
-                                          # (vertex,) table of salted srcs —
+                                          # (src) table of salted srcs —
                                           # the superstep broadcast-filters
                                           # the rank state against it
 
@@ -135,190 +128,94 @@ def _vertices(edges: DataFrame) -> DataFrame:
     )
 
 
-def _prepare(edges: DataFrame, num_partitions: int, strategy: str,
-             hot_threshold: int | None = None, n_edges: int | None = None):
-    """Static per-run tables.  Edge tables are laid out ONCE (G11) and
-    never re-shuffle inside the loop.
-
-    Broadcast mode applies G10 hot-vertex mirroring at layout time: a
-    vertex whose in-degree exceeds ``hot_threshold`` (default
-    max(edges/partitions/4, 16384)) would otherwise put all its edges
-    in one hash(dst) partition and cap scaling at that straggler.  Hot
-    vertices' edges are spread across ALL partitions by an src-derived
-    salt; their per-partition partial sums re-combine through a tiny
-    (#hot x P rows) exchange in the superstep — algebraically exact
-    two-level aggregation (SURVEY.md §2.11 G10).
-
-    Returns (cold_edges, hot_edges_or_None, hot_srcs_or_None, n_edges);
-    the layouts come back MATERIALIZED (counted) and n_edges is that
-    count, so callers never re-scan the caches to size the graph.  The
-    third element is shuffle-mode-only (see PreparedGraph.hot_srcs).
-    """
-    spark = edges.sparkSession
-    if strategy == "broadcast":
-        if n_edges is None:
-            n_edges = edges.count()
-        if hot_threshold is None:
-            hot_threshold = max(n_edges // num_partitions // 4, 16384)
-        # one (src) shuffle, reused by BOTH norm branches below — a bare
-        # agg expression would re-run the shuffle per consuming branch
-        # (measured as ~20% of total bench wall in round 3).  persist
-        # (not localCheckpoint) so it can be RELEASED right after the
-        # layouts materialize instead of pinning O(|V|) blocks until GC.
-        out_w = (
-            edges.groupBy("src")
-            .agg(F.sum("weight").alias("out_w"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        deg_in = edges.groupBy("dst").agg(F.count("*").alias("ind"))
-        # r6: hot-vertex detection and the out-weight cache build are
-        # independent scans of the same cached input — overlap them so
-        # out_w is warm by the time the layouts (its only consumers)
-        # materialize (guide §2.6); cached bytes identical either way
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_hot = _pool.submit(
-                deg_in.filter(F.col("ind") > hot_threshold)
-                .orderBy(F.col("ind").desc())
-                .select("dst").limit(HOT_MIRROR_CAP + 1).collect
-            )
-            _f_ow = _pool.submit(out_w.count)
-            hot_rows = _f_hot.result()
-            _f_ow.result()
-        if len(hot_rows) > HOT_MIRROR_CAP:
-            hot_rows = hot_rows[:HOT_MIRROR_CAP]
-            log.warning(
-                "G10: more than %d vertices exceed the hot threshold %d; "
-                "mirroring only the %d highest-degree ones — the rest take "
-                "the plain hash(dst) path (raise hot_threshold or "
-                "HOT_MIRROR_CAP if stragglers appear)",
-                HOT_MIRROR_CAP, hot_threshold, HOT_MIRROR_CAP,
-            )
-        norm = lambda df: df.join(F.broadcast(out_w), "src").select(  # noqa: E731
-            "src", "dst", (F.col("weight") / F.col("out_w")).alias("w")
-        )
-        if hot_rows:
-            # broadcast-anti/semi against the collected hot set instead of
-            # an IN-list literal: plan size stays flat at HOT_MIRROR_CAP
-            hot_dst = spark.createDataFrame(hot_rows, edges.select("dst").schema)
-            cold = norm(
-                edges.join(F.broadcast(hot_dst), "dst", "left_anti")
-                .repartition(num_partitions, "dst")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            # row-content salt: src alone is itself Zipf-skewed (a hot
-            # dst's in-edges can share one hub src), so salt on the full
-            # row — deterministic, and exact under two-level sum
-            salt = F.pmod(F.xxhash64("src", "dst", "weight"), F.lit(num_partitions))
-            hot = norm(
-                edges.join(F.broadcast(hot_dst), "dst", "left_semi")
-                .repartition(num_partitions, F.col("dst"), salt)
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            cold = norm(
-                edges.repartition(num_partitions, "dst")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            hot = None
-        # materialize the layouts while out_w (and the caller-persisted
-        # input) are cached, then release out_w — it is baked into the
-        # persisted layouts and must not outlive the build.  The counts
-        # double as the n_edges tally (norm preserves rows) so the
-        # caller never re-scans the cached layouts just to count them.
-        # r6: the two cache builds are independent jobs over disjoint
-        # row sets — run them concurrently so the smaller build rides
-        # in the larger one's scheduling tail (guide §2.6); the cached
-        # bytes are identical either way.
-        if hot is not None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_cold = pool.submit(cold.count)
-                f_hot = pool.submit(hot.count)
-                n_cold, n_hot = f_cold.result(), f_hot.result()
-        else:
-            n_cold = cold.count()
-            n_hot = 0
-        out_w.unpersist()
-        return cold, hot, None, n_cold + n_hot
-    # shuffle mode (the beyond-broadcast |V| regime): hash(src) layout —
-    # the state join is exchange-free on the edge side and the per-src
-    # normalization window is partition-local.  A hot SOURCE vertex (the
-    # bench hub: ~30% of all edges from one src) would put its whole
-    # out-edge list in ONE partition — the same straggler G10 mirrors on
-    # the dst side in broadcast mode.  Treatment: salt hot srcs' edges
-    # across all partitions and normalize them via a broadcast join with
-    # their (≤HOT_MIRROR_CAP-row) out-weight table; each superstep then
-    # broadcasts only the hot slice of the rank state into that branch
-    # (step()), so hot edges never re-shuffle.  Exact: per-src sums are
-    # unchanged, only the partition placement differs (L7 algebra).
-    w_out = W.partitionBy("src")
-    norm_window = lambda df: df.select(  # noqa: E731
-        "src", "dst", (F.col("weight") / F.sum("weight").over(w_out)).alias("w")
-    )
-    norm_bcast = lambda df, hot_w: (  # noqa: E731
-        df.join(F.broadcast(hot_w), "src")
-        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("w"))
-    )
-    split = split_hot_srcs(
-        edges.select("src", "dst", "weight"), num_partitions, hot_threshold,
-        map_cold=norm_window, map_hot=norm_bcast,
-        # the frame passed is a FREE projection of `edges`; its lineage
-        # is only cheap when the underlying edge table is cached — keep
-        # this flag in sync if the projection ever gains real work
-        persist_input=edges.storageLevel == StorageLevel.NONE,
-    )
-    return split.cold, split.hot, split.hot_srcs, split.n_edges
-
-
 def prepare_pagerank(
     edges: DataFrame,
     num_partitions: int = 32,
     strategy: str = "auto",
-    hot_threshold: int | None = None,
 ) -> PreparedGraph:
     """Build and MATERIALIZE the per-run layout (G11 + G10) once.
 
-    Returns a :class:`PreparedGraph` whose persisted tables are fully
-    cached (counted) before return, so subsequent supersteps never pay
-    layout cost.  Caller owns the lifetime: call ``.unpersist()`` when
-    done (``pagerank`` without ``prepared=`` does this automatically).
+    The edge tables are laid out once and never re-shuffle inside the
+    loop; hot vertices are split as graph/skew.py states.  Returns a
+    :class:`PreparedGraph` whose persisted tables are fully cached
+    (counted) before return, so supersteps never pay layout cost.
+    Caller owns the lifetime: call ``.unpersist()`` when done
+    (``pagerank`` without ``prepared=`` does this automatically).  Jobs
+    are labelled ``pagerank:prepare``.
 
     The input edge frame feeds up to six passes here (vertex table,
-    edge count, in-degree detection, out-weight normalization, both
-    layout builds), so a raw-lineage input is persisted ONCE for the
-    duration of the build — the split_hot_srcs discipline, hoisted so
-    broadcast mode and ``_vertices`` share it.  A frame the caller
-    already persisted is left alone (persisting again would no-op and
-    the exit unpersist would drop THEIR cache)."""
+    edge count, hot detection, out-weight normalization, both layout
+    builds), so a raw-lineage input is persisted ONCE for the duration
+    of the build.  A frame the caller already persisted is left alone
+    (persisting again would no-op and the exit unpersist would drop
+    THEIR cache)."""
+    spark = edges.sparkSession
     owned_input = edges.storageLevel == StorageLevel.NONE
     if owned_input:
         edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        with no_aqe(edges.sparkSession):
+        with no_aqe(spark), job_description(spark, "pagerank:prepare"):
             # r6: the vertex-table build and the raw edge count are
             # independent scans of the cached input — overlap them
-            # (guide §2.6); strategy choice only needs n, which both
-            # paths wait on
-            from concurrent.futures import ThreadPoolExecutor
-
+            # (guide §2.6)
             vertices = _vertices(edges)
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_n = pool.submit(vertices.count)
-                f_ne = pool.submit(edges.count)
-                n, pre_n_edges = f_n.result(), f_ne.result()
-            if strategy == "auto":
-                strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "shuffle"
-            # _prepare materializes the layouts (while the input is
-            # still cached) and returns their row count — no re-scan
-            cold, hot, hot_srcs, n_edges = _prepare(
-                edges, num_partitions, strategy, hot_threshold,
-                n_edges=pre_n_edges,
-            )
+            n, n_edges = concurrently(spark, vertices.count, edges.count)
+            strategy = resolve_strategy(strategy, n)
+            if strategy == "broadcast":
+                # one (src) shuffle, reused by BOTH layouts' normalization
+                # — a bare agg expression would re-run the shuffle per
+                # branch (~20% of bench wall in round 3).  persist (not
+                # localCheckpoint) so it is RELEASED once the layouts
+                # materialize instead of pinning O(|V|) blocks until GC.
+                out_w = (
+                    edges.groupBy("src")
+                    .agg(F.sum("weight").alias("out_w"))
+                    .persist(StorageLevel.MEMORY_AND_DISK)
+                )
+                # r6: hot detection and the out-weight cache build are
+                # independent scans — overlap them so out_w is warm when
+                # the layouts (its only consumers) materialize
+                hot, _ = concurrently(
+                    spark,
+                    lambda: hot_keys(edges, "dst", num_partitions, n_edges),
+                    out_w.count,
+                )
+                norm = lambda df: df.join(F.broadcast(out_w), "src").select(  # noqa: E731
+                    "src", "dst", (F.col("weight") / F.col("out_w")).alias("w")
+                )
+                layout = salted_layout(
+                    edges, "dst", num_partitions, hot, norm, norm
+                )
+                out_w.unpersist()
+                hot_srcs = None
+            else:
+                # hash(src) layout: the state join is exchange-free on
+                # the edge side and the per-src normalization window is
+                # partition-local; hot srcs normalize against their
+                # out-weight slice, broadcast
+                pre = edges.select("src", "dst", "weight")
+                hot = hot_keys(
+                    pre, "src", num_partitions, n_edges,
+                    F.sum("weight").alias("out_w"),
+                )
+                w_out = W.partitionBy("src")
+                layout = salted_layout(
+                    pre, "src", num_partitions, hot,
+                    map_cold=lambda df: df.select(
+                        "src", "dst",
+                        (F.col("weight") / F.sum("weight").over(w_out)).alias("w"),
+                    ),
+                    map_hot=lambda df: df.join(F.broadcast(hot), "src").select(
+                        "src", "dst", (F.col("weight") / F.col("out_w")).alias("w")
+                    ),
+                )
+                hot_srcs = hot.select("src") if hot is not None else None
     finally:
         if owned_input:
             edges.unpersist()
     return PreparedGraph(
-        cold, hot, vertices, n, n_edges, strategy, num_partitions, hot_srcs
+        layout.cold, layout.hot, vertices, n, layout.n_edges, strategy,
+        num_partitions, hot_srcs,
     )
 
 
@@ -333,7 +230,6 @@ def pagerank(
     resume: bool = False,
     metrics_sink: MetricsSink | None = None,
     strategy: str = "auto",
-    hot_threshold: int | None = None,
     prepared: PreparedGraph | None = None,
     init_ranks: DataFrame | None = None,
     check_every: int = 1,
@@ -381,9 +277,11 @@ def pagerank(
 
     owned = prepared is None
     if prepared is None:
-        prepared = prepare_pagerank(edges, num_partitions, strategy, hot_threshold)
+        prepared = prepare_pagerank(edges, num_partitions, strategy)
     try:
-        with no_aqe(spark):
+        # the loop's initial-state jobs run before its first round sets
+        # a superstep label
+        with no_aqe(spark), job_description(spark, "pagerank:prepare"):
             return _pagerank_loop(
                 spark, prepared, loop, alpha, tol, max_iter,
                 init_ranks, check_every, personalization,

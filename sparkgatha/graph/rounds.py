@@ -77,12 +77,16 @@ Louvain's level loop uses it for labels only.
 Job labels: every Spark job a round launches carries the description
 ``<operator>:<round>`` (a fused block: its last superstep); the
 caller's description is restored when the loop ends by ``break``,
-exhaustion or an exception.
+exhaustion or an exception.  An operator labels the jobs of its entry
+build ``<operator>:prepare`` with :func:`job_description`, the same
+set-and-restore; jobs started through ``util.concurrently`` keep the
+label of the thread that started them.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -127,6 +131,19 @@ def width(spark: SparkSession, rows: int):
     )
 
 
+@contextmanager
+def job_description(spark: SparkSession, label: str):
+    """Label the Spark jobs this thread launches inside the block
+    ``label``; restore the caller's description when the block ends."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty(_DESCRIPTION_KEY)
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(caller)
+
+
 def fixpoint_rounds(
     spark: SparkSession,
     op: str,
@@ -141,19 +158,14 @@ def fixpoint_rounds(
     block policy; the caller breaks when it converges."""
     session_width = int(spark.conf.get(_WIDTH_KEY))
     bound = cap if max_rounds is None else max_rounds
-    sc = spark.sparkContext
-    caller = sc.getLocalProperty(_DESCRIPTION_KEY)
     n = start
-    try:
-        while n < bound:
-            steps = min(max(check_every, 1), bound - n)
-            if checkpoint_every is not None:
-                steps = min(steps, checkpoint_every - n % checkpoint_every)
-            n += steps
-            sc.setJobDescription(f"{op}:{n}")
+    while n < bound:
+        steps = min(max(check_every, 1), bound - n)
+        if checkpoint_every is not None:
+            steps = min(steps, checkpoint_every - n % checkpoint_every)
+        n += steps
+        with job_description(spark, f"{op}:{n}"):
             yield Round(n, n == max_rounds, spark, session_width, steps)
-    finally:
-        sc.setJobDescription(caller)
     if max_rounds is None:
         raise RuntimeError(
             f"{op} did not reach its fixpoint within {cap} rounds"

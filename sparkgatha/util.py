@@ -5,9 +5,11 @@ from __future__ import annotations
 import os
 import threading
 
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def ws_tokens(text_col="text"):
@@ -125,6 +127,18 @@ def materialize(
     else:
         out = observed.localCheckpoint(eager=True)
     return out, obs.get["rows"]
+
+
+def concurrently(spark: SparkSession, *actions):
+    """Run the zero-argument ``actions`` (each launching Spark jobs) at
+    the same time and return their results in order.  Each pool thread
+    carries the caller's local properties, so its jobs keep the caller's
+    job description and group."""
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(a)) for a in actions
+        ]
+        return [f.result() for f in futures]
 
 
 #: target rows per exchange partition for EXACT-arithmetic iterative

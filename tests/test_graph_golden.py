@@ -252,9 +252,10 @@ def test_pagerank_powerlaw_hub(spark):
         assert abs(got[k] - want[k]) < 1e-12
 
 
-def test_lpa_shuffle_strategy_identical(spark):
+def test_lpa_shuffle_strategy_identical(spark, monkeypatch):
     """LPA 'shuffle' (beyond-broadcast regime) is result-identical to
     'broadcast' on the same graph — exact labels, both vs the golden."""
+    from sparkgatha.graph import skew
     from sparkgatha.graph.lpa import label_propagation
 
     triples = random_graph(n=120, m=420, seed=31)
@@ -263,9 +264,10 @@ def test_lpa_shuffle_strategy_identical(spark):
                           strategy="broadcast")
     b = label_propagation(edges, max_iter=12, num_partitions=4,
                           strategy="shuffle")
-    # hot_threshold=1 forces EVERY src down the salted hot branch
+    # a threshold of 1 forces EVERY src down the salted hot branch
+    monkeypatch.setattr(skew, "hot_threshold", lambda *_: 1)
     c = label_propagation(edges, max_iter=12, num_partitions=4,
-                          strategy="shuffle", hot_threshold=1)
+                          strategy="shuffle")
     la = {r["vertex"]: r["label"] for r in a.collect()}
     lb = {r["vertex"]: r["label"] for r in b.collect()}
     lc = {r["vertex"]: r["label"] for r in c.collect()}

@@ -44,18 +44,20 @@ def test_plan_size_bounded_across_supersteps(spark):
     assert p8 <= p2 * 1.5, (p2, p8)
 
 
-def test_edge_exchange_reused_across_superstep(spark):
+def test_edge_exchange_reused_across_superstep(spark, monkeypatch):
     """§4.2 partitioning reuse: the persisted edge layout's exchange is
     not re-planned inside the superstep — the gather plan shows the
     InMemoryTableScan with NO Exchange above it on the edge side."""
-    from sparkgatha.graph.pagerank import _prepare
+    from sparkgatha.graph import skew
+    from sparkgatha.graph.pagerank import prepare_pagerank
     from sparkgatha.util import no_aqe
 
+    monkeypatch.setattr(skew, "hot_threshold", lambda *_: 10**9)
     e = powerlaw_edges(spark, 50_000, n_vertices=2_000, num_partitions=8)
     with no_aqe(spark):
-        cold, hot, hot_srcs, _ = _prepare(e, 8, "broadcast", hot_threshold=10**9)
-        assert hot is None and hot_srcs is None
-        cold.count()
+        prep = prepare_pagerank(e, 8, "broadcast")
+        cold = prep.cold
+        assert prep.hot is None and prep.hot_srcs is None
         state = F.broadcast(
             spark.range(2_000).select(
                 F.col("id").alias("vertex"), F.lit(1.0).alias("rank")
@@ -68,7 +70,7 @@ def test_edge_exchange_reused_across_superstep(spark):
             .agg(F.sum("c").alias("c"))
         )
         plan = gathered._jdf.queryExecution().executedPlan().toString()
-    cold.unpersist()
+    prep.unpersist()
     # partition-local agg: no shuffle Exchange ABOVE the cached edge scan
     # (the InMemoryRelation subtree retains its one-time layout Exchange;
     # BroadcastExchange for the rank vector is expected and allowed)

@@ -253,7 +253,8 @@ def _job_labels(spark, group: str, action) -> list:
 
 
 def test_pagerank_and_lpa_jobs_carry_their_superstep_labels(spark):
-    """A fused block's jobs carry the number of its last superstep."""
+    """A fused block's jobs carry the number of its last superstep, and
+    the entry build's jobs ``<operator>:prepare``."""
     from sparkgatha.graph.lpa import label_propagation
     from sparkgatha.graph.pagerank import pagerank
 
@@ -263,16 +264,42 @@ def test_pagerank_and_lpa_jobs_carry_their_superstep_labels(spark):
         spark, "pagerank-labels",
         lambda: pagerank(edges, tol=0.0, max_iter=5, check_every=2),
     )
-    assert {x for x in pr if x} == {"pagerank:2", "pagerank:4", "pagerank:5"}
+    assert set(pr) == {
+        "pagerank:prepare", "pagerank:2", "pagerank:4", "pagerank:5"
+    }
     lpa = _job_labels(
         spark, "lpa-labels",
         lambda: label_propagation(
             edges, max_iter=5, num_partitions=4, check_every=2
-        ).collect(),
+        ),
     )
-    assert {x for x in lpa if x} == {
-        f"label_propagation:{n}" for n in (2, 4, 5)
+    assert set(lpa) == {
+        f"label_propagation:{n}" for n in ("prepare", 2, 4, 5)
     }
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_prepare_jobs_carry_the_prepare_label(spark, strategy):
+    """Every job of a PageRank layout build, the ones its pool threads
+    start included, is labelled ``pagerank:prepare``; the caller's
+    description is back afterwards."""
+    from sparkgatha.graph.pagerank import prepare_pagerank
+
+    edges = to_spark_edges(spark, [(0, d, 1.0) for d in range(1, 9)])
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        labels = _job_labels(
+            spark, f"prepare-{strategy}",
+            lambda: prepare_pagerank(edges, 2, strategy).unpersist(),
+        )
+        assert sc.getLocalProperty(_DESCRIPTION) == "caller"
+    finally:
+        sc.setJobDescription(None)
+    # vertex table, edge count, hot detection and the layout count at
+    # least; the first two run on pool threads
+    assert len(labels) >= 4
+    assert set(labels) == {"pagerank:prepare"}
 
 
 def test_cc_fixpoint_mode_matches_networkx(spark):
